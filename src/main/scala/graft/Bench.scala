@@ -8,13 +8,7 @@ object Bench {
     val only = args.toSet
     def selected(name: String): Boolean = only.isEmpty || only(name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tuning.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     // evaluate via the noop sink, not count(): count() prunes every
     // column, so a map-heavy query would be timed without computing
     // its output expressions at all

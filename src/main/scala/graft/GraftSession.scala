@@ -27,6 +27,9 @@ object GraftSession {
     // engine's row-group skipping depend on them — and delta-rs /
     // DuckDB read int64 natively
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    // INT64 TIMESTAMP(NANOS) parquet columns decode as raw longs
+    // instead of failing the read; `Tables.events` rescales them
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // static conf: only binds when the session is BUILT with it (the
     // adopted-session path below swallows the runtime-set failure);
     // brings the graft_* SQL functions and the FuseMd5Prefix rule
@@ -34,8 +37,7 @@ object GraftSession {
   )
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder = {
-    val b = SparkSession
-      .builder()
+    val b = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -61,5 +63,12 @@ object GraftSession {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ new graft.plans.AsOfJoinStrategy
     spark
+  }
+
+  /** The session every `graft.*` main runs on: `local[n]` with `n`
+    * shuffle partitions, where `n` is `SPARK_GRAFT_CPUS` (default 4). */
+  def forMain(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    getOrCreate(s"local[$cpus]", cpus)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries (or all) to
   * `<outDir>/<name>.txt` — the plan evidence the optimization rounds
   * commit under `plans/r14/`. Not part of the driver contract.
@@ -15,12 +13,7 @@ object PlanDump {
     outDir.mkdirs()
     val names = if (args.length > 2) args.drop(2).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.tuning.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = GraftSession.forMain()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

@@ -37,12 +37,12 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = fanOut(load(s, d, "lineitem"))
   /** `ts` arrives either as parquet timestamp[ns] (read as long under
-    * the legacy conf, ÷1000 → µs) or as timestamp[us] directly —
-    * the generator has used both physical types across rounds, so
-    * sniff the decoded type instead of assuming one. Either way the
-    * column lands as session-TZ TIMESTAMP at µs precision. */
+    * `GraftSession.tuning`'s nanosAsLong conf, ÷1000 → µs) or as
+    * timestamp[us] directly — the generator has used both physical
+    * types across rounds, so sniff the decoded type instead of
+    * assuming one. Either way the column lands as session-TZ
+    * TIMESTAMP at µs precision. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

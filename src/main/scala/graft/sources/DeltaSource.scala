@@ -68,7 +68,7 @@ object CreateExclusiveCommitStore extends CommitStore {
   *    stays O(commits since checkpoint), not O(table history).
   *  - `changesSince`/`followChanges` replay the log incrementally —
   *    the change-data-feed read over a real `_delta_log` table,
-  *    mirroring `VersionedZone.changesSince`'s cursor contract.
+  *    resumable from a stored version cursor.
   *
   * Everything goes through the Hadoop FileSystem API — local disk,
   * s3a, or any other configured scheme behave identically (commit
@@ -3431,8 +3431,7 @@ object DeltaSource {
       (v, removed, added)
     }.filter { case (_, rm, ad) => rm.nonEmpty && ad.nonEmpty }
 
-  /** The Delta log as an incremental change SOURCE — the cursor
-    * contract of `VersionedZone.changesSince` over a real
+  /** The Delta log as an incremental change SOURCE over a real
     * `_delta_log` table: every commit after `cursor` contributes the
     * rows it ADDED, tagged with `_commit_version`. Consume, persist
     * the cursor, poll again — exactly-once per commit with a stored
@@ -3443,10 +3442,11 @@ object DeltaSource {
     *
     * Append commits yield exactly the snapshot diff. A full-replace
     * (`overwrite = true`) commit yields its complete new snapshot —
-    * consumers that upsert by key (e.g. `VersionedZone.upsertSink`)
-    * absorb either shape; removed-only rows are not replayed (the
-    * data files backing a remove may already be vacuumed, same
-    * reason Delta's own CDF materializes deletes separately). */
+    * consumers that upsert by key (e.g.
+    * `StreamingPipeline.upsertSink`) absorb either shape;
+    * removed-only rows are not replayed (the data files backing a
+    * remove may already be vacuumed, same reason Delta's own CDF
+    * materializes deletes separately). */
   def changesSince(spark: SparkSession, tablePath: String,
                    cursor: Option[Long]): (Option[Long], Option[DataFrame]) = {
     val logDir = new Path(tablePath, "_delta_log")
@@ -3471,8 +3471,8 @@ object DeltaSource {
     * — the foreachBatch shape with the commit version as the batch id
     * (restart-safe: re-running from the same stored cursor replays
     * exactly the unseen commits, in order). Composes with
-    * `VersionedZone.upsertSink`-style consumers to tail a live Delta
-    * zone. */
+    * `StreamingPipeline.upsertSink`-style consumers to tail a live
+    * Delta zone. */
   def followChanges(spark: SparkSession, tablePath: String, cursor: Option[Long])
                    (f: (Long, DataFrame) => Unit): Option[Long] = {
     val logDir = new Path(tablePath, "_delta_log")

@@ -83,16 +83,6 @@ object GraphAnnIndex {
                         pqM: Int, nCodes: Int,
                         corpusFp: String, appliedFps: Seq[String])
 
-  /** Dev-only stage timer (set GRAFT_PROBE=1): stderr wall-clock per
-    * labelled stage, zero cost otherwise. */
-  private def probe[T](tag: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_PROBE")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"PROBE $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else f
-
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -941,17 +931,17 @@ object GraphAnnIndex {
         .foreach(st => hfs.delete(st.getPath, false))
     hfs.delete(new Path(s"$dir/retired/ret-$fp8"), true)
 
-    val newAssign = probe("inc:newAssign")(Similarity
+    val newAssign = Similarity
       .bucketAssign(newEmb, meta.nBits, meta.tables, meta.dim, idCol, vecCol)
-      .localCheckpoint(true)) // increment-sized; hashed once
+      .localCheckpoint(true) // increment-sized; hashed once
     val oldAssign = loadBuckets(spark, dir)
     val grown = oldAssign.unionByName(newAssign.select(
       col("id"), col("v"), col("nrm"), col("tbl"), col("bucket")))
     val affBuckets = newAssign.select(col("tbl"), col("bucket")).distinct()
-    val affNodes = probe("inc:affNodes")(grown
+    val affNodes = grown
       .join(broadcast(affBuckets), Seq("tbl", "bucket"), "leftsemi")
       .select(col("id")).distinct()
-      .localCheckpoint(true)) // O(new·occupancy) ids
+      .localCheckpoint(true) // O(new·occupancy) ids
     // round 15 (guide §2.2): the increment is O(affected·occupancy)
     // by contract — size every downstream shuffle from the affected
     // set, not the session conf (same rationale as buildAndSave)
@@ -962,7 +952,7 @@ object GraphAnnIndex {
     // listEdges branches — the affected×occupancy re-scoring is the
     // increment's dominant compute and ran three times through the
     // lineage. O(affected·m) id pairs.
-    val lists = probe("inc:lists")(Similarity.localLists(srcSide, grown, meta.m).localCheckpoint(true))
+    val lists = Similarity.localLists(srcSide, grown, meta.m).localCheckpoint(true)
     val nodesGrown = grown.where(col("tbl") === 0)
       .select(col("id"), col("v"), col("nrm"))
     val newIds = newAssign.where(col("tbl") === 0).select(col("id"))
@@ -978,8 +968,8 @@ object GraphAnnIndex {
       .unionByName(newIds)
       .unionByName(newIds.where(col("id") > 0)
         .select(floor(col("id") / 2).cast("long").as("id")))
-    val nodesNeeded = probe("inc:nodesNeeded")(nodesGrown.join(endpointIds, Seq("id"), "leftsemi")
-      .localCheckpoint(true))
+    val nodesNeeded = nodesGrown.join(endpointIds, Seq("id"), "leftsemi")
+      .localCheckpoint(true)
     val nodesC = nodesNeeded.join(
       pqCodesArr(nodesNeeded, cb, meta.pqM, meta.dim / meta.pqM), Seq("id"))
     // backbone src-existence gate: a new node's tree parent may have
@@ -1026,25 +1016,22 @@ object GraphAnnIndex {
 
     // incremental edge files cluster by src too (same read-path
     // row-group pruning as the build's edges write)
-    probe("inc:stage-edges")(stageIn(edgesNew, s"$dir/edges", Some("pb"),
-      sortCol = Some(col("src"))))
-    probe("inc:stage-buckets")(stageIn(newAssign.select(col("id"), col("v"), col("nrm"), col("bucket"), col("tbl")),
-      s"$dir/buckets", Some("tbl")))
-    probe("inc:stage-nodes")(stageIn(newAssign.where(col("tbl") === 0)
+    stageIn(edgesNew, s"$dir/edges", Some("pb"), sortCol = Some(col("src")))
+    stageIn(newAssign.select(col("id"), col("v"), col("nrm"), col("bucket"), col("tbl")),
+      s"$dir/buckets", Some("tbl"))
+    stageIn(newAssign.where(col("tbl") === 0)
       .select(col("id"), col("v"), col("nrm"))
       .withColumn("nb", pmod(col("id"), lit(meta.pBuckets.toLong))),
-      s"$dir/nodes", Some("nb")))
+      s"$dir/nodes", Some("nb"))
     val newEntries = newAssign.where(col("tbl") === 0 && col("id") < meta.entryCap)
       .select(col("id"), col("v"), col("nrm"))
-    probe("inc:entries")(if (newEntries.limit(1).count() > 0)
-      stageIn(newEntries.coalesce(1), s"$dir/entries", None))
+    if (newEntries.limit(1).count() > 0)
+      stageIn(newEntries.coalesce(1), s"$dir/entries", None)
     // tombstone every recomputed owner (new owners are a no-op mask:
     // they have no earlier generations), then commit via meta
-    probe("inc:retired+meta") {
-      affNodes.select(col("id").as("owner"), lit(gen).as("before_gen"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/retired/ret-$fp8")
-      writeMeta(spark, dir, meta.copy(appliedFps = meta.appliedFps :+ fp))
-    }
+    affNodes.select(col("id").as("owner"), lit(gen).as("before_gen"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/retired/ret-$fp8")
+    writeMeta(spark, dir, meta.copy(appliedFps = meta.appliedFps :+ fp))
     true
     }
   }

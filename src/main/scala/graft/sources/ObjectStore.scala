@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * through it. In Spark the equivalent is the s3a Hadoop filesystem;
   * graft's IO never touches `java.io.File`, so any table path may be
   * an `s3a://bucket/prefix` (or any other configured Hadoop scheme)
-  * URI — `Tables.load`, `Sources.*`, `VersionedZone`, and
-  * `DeltaSource` all resolve through the Hadoop FileSystem API.
+  * URI — `Tables.load`, `Sources.*` and `DeltaSource` all resolve
+  * through the Hadoop FileSystem API.
   *
   * These settings land on the session's hadoopConfiguration, so they
   * apply to executors' scans as well as driver-side log/commit IO.

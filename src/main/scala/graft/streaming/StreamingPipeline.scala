@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Chunker, Medallion}
+import graft.sources.DeltaSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
@@ -53,14 +54,13 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
 
-  /** Stream enriched against the versioned zone's LATEST committed
+  /** Stream enriched against a Delta zone's LATEST committed
     * snapshot, re-resolved per micro-batch. A plain stream-static
-    * join pins the files it saw at planning time — new snapshot
-    * versions (new directories) are invisible to it — so the
-    * re-resolution happens in foreachBatch, where each batch freshly
-    * reads `latestVersion`. The dimension snapshot broadcasts (it's
-    * the small side by contract); rows with no match keep NULL
-    * enrichment (left join) rather than silently dropping. */
+    * join pins the files it saw at planning time — later commits are
+    * invisible to it — so the re-resolution happens in foreachBatch,
+    * where each batch freshly replays the log. The dimension snapshot
+    * broadcasts (it's the small side by contract); rows with no match
+    * keep NULL enrichment (left join) rather than silently dropping. */
   def enrichFromLatestSnapshot(stream: DataFrame, zonePath: String,
                                checkpointDir: String, key: String,
                                enrichCols: Seq[String])
@@ -71,7 +71,7 @@ object StreamingPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import org.apache.spark.sql.functions.{broadcast, col}
         val spark = batch.sparkSession
-        val dim = graft.sources.VersionedZone.read(spark, zonePath)
+        val dim = DeltaSource.readDelta(spark, zonePath)
           .select((key +: enrichCols).map(col).toIndexedSeq: _*)
         out(batch.join(broadcast(dim), Seq(key), "left"), batchId)
         ()
@@ -82,8 +82,8 @@ object StreamingPipeline {
     * durable order log, then ONLY the touched customers' dimension
     * histories are rebuilt from the log and merged over the previous
     * snapshot (untouched customers carry over untouched). The merged
-    * dimension lands as a new committed version of the zone, so
-    * every historical dimension state stays time-travelable. Work
+    * dimension lands as a new commit of the Delta zone, so every
+    * historical dimension state stays time-travelable. Work
     * per batch is O(touched customers' orders), not O(log) — the
     * incremental-view-maintenance contract; a batch rebuild over the
     * full log gives bit-identical rows (spec-pinned). */
@@ -103,7 +103,7 @@ object StreamingPipeline {
     * duplicate order rows (which would permanently inflate counts
     * and corrupt version segmentation in every later rebuild). The
     * dimension re-merge is naturally idempotent (same log prefix →
-    * same rebuilt rows; the extra zone version carries identical
+    * same rebuilt rows; the extra Delta version carries identical
     * content). */
   def scd2Batch(batch: DataFrame, batchId: Long, logPath: String, dimPath: String): Unit = {
     import org.apache.spark.sql.functions.col
@@ -112,15 +112,45 @@ object StreamingPipeline {
     val touched = batch.select(col("o_custkey")).distinct()
     val rebuilt = graft.operators.Analytics.scd2Of(
       spark.read.parquet(logPath).drop("batch_id").join(touched, "o_custkey"))
-    val merged = graft.sources.VersionedZone.latestVersion(spark, dimPath) match {
+    val merged = DeltaSource.latestVersion(spark, dimPath) match {
       case Some(_) =>
-        graft.sources.VersionedZone.read(spark, dimPath)
+        DeltaSource.readDelta(spark, dimPath)
           .join(touched.withColumnRenamed("o_custkey", "custkey"),
             Seq("custkey"), "left_anti")
           .unionByName(rebuilt)
       case None => rebuilt
     }
-    graft.sources.VersionedZone.write(merged, dimPath)
+    DeltaSource.writeDelta(merged, dimPath)
     ()
   }
+
+  /** Streaming MERGE sink: each micro-batch upserts into the Delta
+    * table at `path` by `key` — continuous CDC ingest with one
+    * commit per batch, so every prior state stays time-travelable.
+    * The first batch creates the table as version 0.
+    *
+    * A CDC micro-batch can carry several rows for one key (two rapid
+    * updates coalesced into one trigger); `mergeDelta`'s contract is
+    * one update row per key, so each batch is first reduced to its
+    * winning row — latest by `orderCol` when given, ties (and the
+    * no-orderCol case) broken by a full-row hash so the survivor is
+    * deterministic across retries rather than partition-order luck. */
+  def upsertSink(stream: DataFrame, path: String, checkpointDir: String,
+                 key: String = "doc_id", orderCol: Option[String] = None)
+      : DataStreamWriter[Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        import org.apache.spark.sql.expressions.Window
+        import org.apache.spark.sql.functions.{col, row_number, xxhash64}
+        val spark = batch.sparkSession
+        val tiebreak = xxhash64(batch.columns.map(col).toIndexedSeq: _*)
+        val ord = orderCol.map(c => col(c).desc_nulls_last).toSeq :+ tiebreak.desc
+        val w = Window.partitionBy(col(key)).orderBy(ord: _*)
+        val deduped = batch.withColumn("__rn", row_number().over(w))
+          .where(col("__rn") === 1).drop("__rn")
+        if (DeltaSource.latestVersion(spark, path).isEmpty) DeltaSource.writeDelta(deduped, path)
+        else DeltaSource.mergeDelta(spark, path, deduped, Seq(key))
+        ()
+      }
 }

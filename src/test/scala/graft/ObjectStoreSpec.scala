@@ -40,10 +40,6 @@ class ObjectStoreSpec extends SparkSpec {
       DeltaSource.checkpoint(spark, uri)
       assert(DeltaSource.readDelta(spark, uri).as[(Long, String)]
         .collect().toSet == Set((1L, "x"), (2L, "y"), (3L, "z")))
-      // versioned zone too (the other committed-write path)
-      val zUri = s"graftfs://$tmp/z"
-      graft.sources.VersionedZone.write(Seq((1L, "a")).toDF("k", "v"), zUri)
-      assert(graft.sources.VersionedZone.read(spark, zUri).count() == 1)
     }
   }
 

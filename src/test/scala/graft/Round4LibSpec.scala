@@ -1,13 +1,13 @@
 package graft
 
 import graft.operators.Analytics
-import graft.sources.{Sources, VersionedZone}
+import graft.sources.{DeltaSource, Sources}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
-/** Round-4 library surfaces: bin-packed compaction, the change feed
-  * as an incremental source, per-batch snapshot re-resolution, and
-  * cost-estimate audits next to the plan-shape guards. */
+/** Round-4 library surfaces: bin-packed compaction, per-batch
+  * snapshot re-resolution, and cost-estimate audits next to the
+  * plan-shape guards. */
 class Round4LibSpec extends SparkSpec {
   import spark.implicits._
 
@@ -36,35 +36,10 @@ class Round4LibSpec extends SparkSpec {
     assert(back.agg(sum($"id")).as[Long].head() == (1L to 5050L).sum)
   }
 
-  test("change feed yields each committed version exactly once from a stored cursor") {
-    val tmp = Files.createTempDirectory("graft_cdf").toString
-    val zone = s"$tmp/zone"
-    VersionedZone.write(Seq((1L, "a"), (2L, "b")).toDF("doc_id", "val"), zone)
-    VersionedZone.write(Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("doc_id", "val"), zone)
-    VersionedZone.write(Seq((2L, "B"), (3L, "c")).toDF("doc_id", "val"), zone)
-    val (cur, feedOpt) = VersionedZone.changesSince(spark, zone, None)
-    assert(cur.contains(2L))
-    val feed = feedOpt.get.select($"version", $"doc_id", $"change_type")
-      .as[(Long, Long, String)].collect().toSet
-    assert(feed == Set(
-      (0L, 1L, "insert"), (0L, 2L, "insert"),
-      (1L, 2L, "update"), (1L, 3L, "insert"),
-      (2L, 1L, "delete")))
-    // drained cursor: nothing new
-    val (cur2, feed2) = VersionedZone.changesSince(spark, zone, cur)
-    assert(cur2 == cur && feed2.isEmpty)
-    // mid-stream cursor resumes at the right version
-    val perVersion = scala.collection.mutable.Map.empty[Long, Long]
-    val fin = VersionedZone.followChanges(spark, zone, Some(0L)) { (v, df) =>
-      perVersion(v) = df.count()
-    }
-    assert(fin.contains(2L) && perVersion.toMap == Map(1L -> 2L, 2L -> 1L))
-  }
-
   test("streaming enrich re-resolves the latest snapshot every micro-batch") {
     val tmp = Files.createTempDirectory("graft_enrich").toString
     val zone = s"$tmp/zone"
-    VersionedZone.write(Seq((7L, "v0-name")).toDF("user_id", "name"), zone)
+    DeltaSource.writeDelta(Seq((7L, "v0-name")).toDF("user_id", "name"), zone)
 
     def land(ids: Seq[Long], name: String): Unit = {
       val stage = s"$tmp/stage_$name"
@@ -89,7 +64,7 @@ class Round4LibSpec extends SparkSpec {
       try { q.processAllAvailable() } finally { q.stop() }
     }
     land(Seq(7L), "b1"); runOnce()
-    VersionedZone.write(Seq((7L, "v1-name")).toDF("user_id", "name"), zone)
+    DeltaSource.writeDelta(Seq((7L, "v1-name")).toDF("user_id", "name"), zone)
     land(Seq(7L), "b2"); runOnce()
     assert(seen.toList == List((7L, "v0-name"), (7L, "v1-name")),
       "second batch must see the new snapshot version")

@@ -86,7 +86,8 @@ class StreamingCurationSpec extends SparkSpec {
   }
 
   test("streaming upsert sink merges micro-batches into a versioned zone") {
-    import graft.sources.VersionedZone
+    import graft.sources.DeltaSource
+    import graft.streaming.StreamingPipeline
     val tmp = Files.createTempDirectory("graft_vz").toString
     val zone = s"$tmp/zone"
 
@@ -103,27 +104,29 @@ class StreamingCurationSpec extends SparkSpec {
 
     val b1 = Seq((1L, "one", "s"), (2L, "two", "s")).toDF("doc_id", "text", "source")
     land(b1, "b1")
-    val q1 = VersionedZone.upsertSink(
+    val q1 = StreamingPipeline.upsertSink(
       spark.readStream.schema(b1.schema).parquet(s"$tmp/in"), zone, s"$tmp/cp").start()
     try { q1.processAllAvailable() } finally { q1.stop() }
 
     // batch 2: doc 1 updated, doc 3 new
     land(Seq((1L, "one-v2", "s"), (3L, "three", "s")).toDF("doc_id", "text", "source"), "b2")
-    val q2 = VersionedZone.upsertSink(
+    val q2 = StreamingPipeline.upsertSink(
       spark.readStream.schema(b1.schema).parquet(s"$tmp/in"), zone, s"$tmp/cp").start()
     try { q2.processAllAvailable() } finally { q2.stop() }
 
-    val latest = VersionedZone.read(spark, zone)
+    val latest = DeltaSource.readDelta(spark, zone)
       .select($"doc_id", $"text").as[(Long, String)].collect().toSeq.sortBy(_._1)
     assert(latest == Seq((1L, "one-v2"), (2L, "two"), (3L, "three")))
+    assert(DeltaSource.latestVersion(spark, zone).contains(1L), "one commit per micro-batch")
     // time travel: version 0 still holds the pre-update state
-    val v0 = VersionedZone.read(spark, zone, Some(0L))
+    val v0 = DeltaSource.readDelta(spark, zone, Some(0L))
       .select($"doc_id", $"text").as[(Long, String)].collect().toSeq.sortBy(_._1)
     assert(v0 == Seq((1L, "one"), (2L, "two")))
   }
 
   test("upsert sink reduces duplicate-key micro-batches deterministically") {
-    import graft.sources.VersionedZone
+    import graft.sources.DeltaSource
+    import graft.streaming.StreamingPipeline
     val tmp = Files.createTempDirectory("graft_vzdup").toString
     val zone = s"$tmp/zone"
 
@@ -141,12 +144,12 @@ class StreamingCurationSpec extends SparkSpec {
     val b = Seq((1L, "one-v1", 10L), (1L, "one-v2", 20L), (2L, "two", 5L))
       .toDF("doc_id", "text", "seq")
     land(b, "b1")
-    val q = VersionedZone.upsertSink(
+    val q = StreamingPipeline.upsertSink(
       spark.readStream.schema(b.schema).parquet(s"$tmp/in"),
       zone, s"$tmp/cp", orderCol = Some("seq")).start()
     try { q.processAllAvailable() } finally { q.stop() }
 
-    val latest = VersionedZone.read(spark, zone)
+    val latest = DeltaSource.readDelta(spark, zone)
       .select($"doc_id", $"text").as[(Long, String)].collect().toSeq.sortBy(_._1)
     assert(latest == Seq((1L, "one-v2"), (2L, "two")))
   }
@@ -248,19 +251,6 @@ class StreamingCurationSpec extends SparkSpec {
       ("2024-01-01 12:00:00", "view", 2L),
       ("2024-01-01 13:00:00", "click", 1L)), s"got $loose")
     assert(droppedLoose == 0L, s"nothing should drop under the loose delay, got $droppedLoose")
-  }
-
-  test("snapshot diff reports inserts, updates and deletes by key") {
-    import graft.sources.VersionedZone
-    val tmp = Files.createTempDirectory("graft_cdf").toString
-    val zone = s"$tmp/zone"
-    VersionedZone.write(Seq((1L, "one", "s"), (2L, "two", "s"), (3L, "three", "s"))
-      .toDF("doc_id", "text", "source"), zone)
-    VersionedZone.write(Seq((1L, "one", "s"), (2L, "two-v2", "s"), (4L, "four", "s"))
-      .toDF("doc_id", "text", "source"), zone)
-    val changes = VersionedZone.readChanges(spark, zone, 0L, 1L)
-      .as[(Long, String)].collect().toSeq
-    assert(changes == Seq((2L, "update"), (3L, "delete"), (4L, "insert")))
   }
 
   test("streaming hopping agg matches the batch operator") {

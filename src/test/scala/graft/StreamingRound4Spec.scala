@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.operators.{Analytics, Events, Sketches}
+import graft.sources.DeltaSource
 import graft.streaming.{StreamingEvents, StreamingPipeline}
 import org.apache.spark.sql.functions._
 
@@ -73,12 +74,12 @@ class StreamingRound4Spec extends SparkSpec {
     run()
     land(orders.where($"o_orderkey" % 2 === 1), "b2")
     run()
-    val dim = graft.sources.VersionedZone.read(spark, s"$tmp/dim")
+    val dim = DeltaSource.readDelta(spark, s"$tmp/dim")
     val expect = Analytics.scd2Of(orders)
     assert(dim.count() == expect.count())
     assert(dim.exceptAll(expect).isEmpty && expect.exceptAll(dim).isEmpty)
     // and the v0 snapshot is exactly the batch-1-only build
-    val v0 = graft.sources.VersionedZone.read(spark, s"$tmp/dim", Some(0L))
+    val v0 = DeltaSource.readDelta(spark, s"$tmp/dim", Some(0L))
     val expect0 = Analytics.scd2Of(orders.where($"o_orderkey" % 2 === 0))
     assert(v0.exceptAll(expect0).isEmpty && expect0.exceptAll(v0).isEmpty)
     // foreachBatch is at-least-once: redelivering an already-committed
@@ -87,7 +88,7 @@ class StreamingRound4Spec extends SparkSpec {
     StreamingPipeline.scd2Batch(
       orders.where($"o_orderkey" % 2 === 1), 1L, s"$tmp/log", s"$tmp/dim")
     assert(spark.read.parquet(s"$tmp/log").count() == logN, "replay duplicated log rows")
-    val dim2 = graft.sources.VersionedZone.read(spark, s"$tmp/dim")
+    val dim2 = DeltaSource.readDelta(spark, s"$tmp/dim")
     assert(dim2.exceptAll(expect).isEmpty && expect.exceptAll(dim2).isEmpty)
   }
 }
