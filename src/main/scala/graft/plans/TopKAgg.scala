@@ -38,31 +38,10 @@ case class TopKAgg(scoreExpr: Expression, idExpr: Expression, k: Int,
 
   override def createAggregationBuffer(): ArrayBuffer[(Double, Long)] = ArrayBuffer.empty
 
-  /** score DESC under Spark SQL ordering (NaN sorts as the largest
-    * double, so it ranks FIRST under DESC), then id ASC — keeps
-    * results interchangeable with the row_number() formulation even
-    * when a scorer emits NaN (e.g. cosine of a zero-norm vector). */
-  private def orderKey(p: (Double, Long)): (Int, Double, Long) = p match {
-    case (s, id) => (if (s.isNaN) 0 else 1, if (s.isNaN) 0.0 else -s, id)
-  }
-
-  /** Cut the buffer back to its top-k rows. With `dedupIds` the
-    * cut keeps the k best DISTINCT ids (per-id best score first —
-    * sorted order puts it first, distinctBy keeps first), which is
-    * exactly `dropDuplicates(id)` + top-k whenever every duplicate
-    * of an id carries the same score (the deterministic-scorer
-    * contract of the beam walk). Discarding below the k-th distinct
-    * id is safe: a reappearing duplicate scores the same and would
-    * be discarded again. */
-  private def cut(buf: ArrayBuffer[(Double, Long)]): ArrayBuffer[(Double, Long)] = {
-    val sorted = buf.sortBy(orderKey)
-    (if (dedupIds) sorted.distinctBy(_._2) else sorted).take(k)
-  }
-
   private def prune(buf: ArrayBuffer[(Double, Long)]): ArrayBuffer[(Double, Long)] =
     if (buf.length <= 2 * k) buf
     else {
-      val kept = cut(buf)
+      val kept = TopKAgg.cut(buf, k, dedupIds)
       buf.clear(); buf ++= kept
     }
 
@@ -83,7 +62,7 @@ case class TopKAgg(scoreExpr: Expression, idExpr: Expression, k: Int,
   }
 
   override def eval(buf: ArrayBuffer[(Double, Long)]): Any = {
-    val top = cut(buf)
+    val top = TopKAgg.cut(buf, k, dedupIds)
     new GenericArrayData(top.map { case (s, id) =>
       InternalRow(id, s)
     }.toArray[Any])
@@ -114,6 +93,28 @@ case class TopKAgg(scoreExpr: Expression, idExpr: Expression, k: Int,
 }
 
 object TopKAgg {
+  /** score DESC under Spark SQL ordering (NaN sorts as the largest
+    * double, so it ranks FIRST under DESC), then id ASC — keeps
+    * results interchangeable with the row_number() formulation even
+    * when a scorer emits NaN (e.g. cosine of a zero-norm vector). */
+  private[graft] def orderKey(p: (Double, Long)): (Int, Double, Long) = p match {
+    case (s, id) => (if (s.isNaN) 0 else 1, if (s.isNaN) 0.0 else -s, id)
+  }
+
+  /** Cut `buf` to its top-k rows under [[orderKey]]. With `dedupIds`
+    * the cut keeps the k best DISTINCT ids (per-id best score first —
+    * sorted order puts it first, distinctBy keeps first), which is
+    * exactly `dropDuplicates(id)` + top-k whenever every duplicate
+    * of an id carries the same score (the deterministic-scorer
+    * contract of the beam walk). Discarding below the k-th distinct
+    * id is safe: a reappearing duplicate scores the same and would
+    * be discarded again. */
+  private[graft] def cut(buf: ArrayBuffer[(Double, Long)], k: Int,
+                         dedupIds: Boolean): ArrayBuffer[(Double, Long)] = {
+    val sorted = buf.sortBy(orderKey)
+    (if (dedupIds) sorted.distinctBy(_._2) else sorted).take(k)
+  }
+
   /** `top_k(score, id, k)` as a Column aggregate. */
   def topK(score: Column, id: Column, k: Int): Column =
     GraftBridge.column(TopKAgg(GraftBridge.expression(score),

@@ -2,10 +2,21 @@ package graft.sources
 
 import graft.functions.VectorFunctions._
 import graft.operators.Similarity
+import graft.plans.{NativeExprs, TopKAgg}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BasePredicate, BindReferences,
+  Expression, Predicate, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable.{ArrayBuffer, LongMap}
 
 /** Persisted small-world graph index — the build / serve split for
   * the NSW family (the graph twin of [[AnnIndex]]'s IVF-PQ layout,
@@ -32,7 +43,11 @@ import org.apache.spark.sql.types._
   *              maintenance pass that RECOMPUTED owner's adjacency
   *              list masks the list's older generations at read time
   *     meta/    (m, tables, n_bits, dim, p_buckets, entry_cap,
-  *              pq_m, n_codes, corpus_fp, applied_fps)
+  *              pq_m, n_codes, corpus_fp, applied_fps, vec_type)
+  *
+  * Every table is read with its fixed layout schema (ids as bigint,
+  * the vector column as meta's `vec_type`, the corpus's own vector
+  * type), so opening the index runs no schema-inference job.
   *
   * Why vectors ride ON the edges: a beam step expands frontier →
   * neighbors → scores them, and the expensive half at scale is
@@ -55,21 +70,28 @@ import org.apache.spark.sql.types._
   * above [[GraphAnnIndex.MaskMapLimit]] — the same dual the DV scan
   * path uses.
   *
-  * Search cost: each of the `steps` beam rounds reads only the
-  * `pb` partitions the frontier hashes into (static isin pruning —
-  * the frontier is queries×beam, model-sized, known on the driver)
-  * and row-group-prunes on `src`. At a billion vectors a search
-  * touches O(steps·beam·degree) edge rows and ZERO corpus rows;
-  * corpus-scale work happens exactly once, at build. When a caller
-  * serves a query batch too large to hold the frontier driver-side
-  * (beyond `maxDriverFrontier` rows), the loop degrades to the
-  * distributed shape: pinned frontier, pb-pruned edge scan (the
-  * frontier's distinct pb set is ≤ pBuckets rows — one cheap
-  * aggregate per round), and a SIZE-ROUTED probe — the frontier
-  * broadcasts only below `maxBroadcastFrontier` rows; above it the
-  * join shuffles on src (sort-merge), so no step ever materializes
-  * the frontier on the driver. Still one scan per step, never per
-  * query, and branch choice is an execution-strategy swap, never a
+  * Search cost: a search reads ZERO corpus rows; corpus-scale work
+  * happens exactly once, at build. When the frontier fits the driver
+  * (nq·max(beam, entries) ≤ `maxDriverFrontier` rows), round 0
+  * scores entries × queries on the driver and each of steps 1 to
+  * steps-1 is ONE Spark job (no SQL planning) over a per-search
+  * cached adjacency: src → its live, delete-masked out-edges with
+  * `dv`/`dnrm` inline. Building that cache scans the WHOLE live edge
+  * table once per search (O(edges) bytes, the price of planning-free
+  * steps); each step then looks up only its frontier's lists,
+  * O(beam·degree) candidates per query. The last step stays a lazy
+  * plan that reads only the `pb` partitions the frontier hashes into
+  * and row-group-prunes on `src` (static isin pruning), so the
+  * returned frame's lineage is index bytes only. When a caller serves
+  * a query batch too large to hold the frontier driver-side, the loop
+  * degrades to the distributed shape: the live edge table pinned
+  * with persist (again a whole-table read), a localCheckpointed
+  * frontier, a pb-pruned probe per step (the frontier's distinct pb
+  * set is ≤ pBuckets rows — one cheap aggregate per round), and a
+  * SIZE-ROUTED join — the frontier broadcasts only below
+  * `maxBroadcastFrontier` rows; above it the join shuffles on src
+  * (sort-merge), so no step ever materializes the frontier on the
+  * driver. Branch choice is an execution-strategy swap, never a
   * result change (spec-pinned).
   */
 object GraphAnnIndex {
@@ -81,41 +103,60 @@ object GraphAnnIndex {
   final case class Meta(m: Int, tables: Int, nBits: Int, dim: Int,
                         pBuckets: Int, entryCap: Int,
                         pqM: Int, nCodes: Int,
-                        corpusFp: String, appliedFps: Seq[String])
+                        corpusFp: String, appliedFps: Seq[String],
+                        vecType: String)
+
+  private val MetaSchema =
+    "m int, tables int, n_bits int, dim int, p_buckets int, entry_cap int, " +
+      "pq_m int, n_codes int, corpus_fp string, applied_fps string, vec_type string"
+  private def edgeSchema(vecType: String) =
+    s"src bigint, dst bigint, dv $vecType, dnrm double, dcodes array<bigint>, " +
+      "kind string, owner bigint, gen int, pb bigint"
+  private def bucketSchema(vecType: String) =
+    s"id bigint, v $vecType, nrm double, bucket bigint, tbl int"
+
+  /** (id, v, nrm) — the deterministic beam entry points. */
+  private def readEntries(spark: SparkSession, dir: String, vecType: String): DataFrame =
+    spark.read.schema(s"id bigint, v $vecType, nrm double").parquet(s"$dir/entries")
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private[graft] def readMeta(spark: SparkSession, dir: String): Meta = {
-    val r = spark.read.parquet(s"$dir/meta").head()
-    Meta(r.getAs[Int]("m"), r.getAs[Int]("tables"), r.getAs[Int]("n_bits"),
-      r.getAs[Int]("dim"), r.getAs[Int]("p_buckets"), r.getAs[Int]("entry_cap"),
-      r.getAs[Int]("pq_m"), r.getAs[Int]("n_codes"),
+    val r = spark.read.schema(MetaSchema).parquet(s"$dir/meta").head()
+    // getInt throws on NULL: a meta missing a field is unreadable
+    // (ensureBuilt then rebuilds), never silently 0
+    def int(c: String) = r.getInt(r.fieldIndex(c))
+    Meta(int("m"), int("tables"), int("n_bits"), int("dim"), int("p_buckets"),
+      int("entry_cap"), int("pq_m"), int("n_codes"),
       r.getAs[String]("corpus_fp"),
       Option(r.getAs[String]("applied_fps")).filter(_.nonEmpty)
-        .map(_.split(",").toSeq).getOrElse(Nil))
+        .map(_.split(",").toSeq).getOrElse(Nil),
+      // a meta written before vec_type was recorded: take the type
+      // from the entries footer (one inference job)
+      Option(r.getAs[String]("vec_type")).getOrElse(
+        spark.read.parquet(s"$dir/entries").schema("v").dataType.catalogString))
   }
 
   private def writeMeta(spark: SparkSession, dir: String, meta: Meta): Unit = {
     import spark.implicits._
     Seq((meta.m, meta.tables, meta.nBits, meta.dim, meta.pBuckets, meta.entryCap,
-      meta.pqM, meta.nCodes, meta.corpusFp, meta.appliedFps.mkString(",")))
+      meta.pqM, meta.nCodes, meta.corpusFp, meta.appliedFps.mkString(","), meta.vecType))
       .toDF("m", "tables", "n_bits", "dim", "p_buckets", "entry_cap",
-        "pq_m", "n_codes", "corpus_fp", "applied_fps")
+        "pq_m", "n_codes", "corpus_fp", "applied_fps", "vec_type")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
   /** The frozen assignment read back in [[Similarity.bucketAssign]]
     * shape (tbl restored from its partition directory). */
-  private def loadBuckets(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/buckets")
-      .select(col("id").cast("long"), col("v"), col("nrm"),
-        col("tbl").cast("int"), col("bucket").cast("long"))
+  private def loadBuckets(spark: SparkSession, dir: String, vecType: String): DataFrame =
+    spark.read.schema(bucketSchema(vecType)).parquet(s"$dir/buckets")
+      .select(col("id"), col("v"), col("nrm"), col("tbl"), col("bucket"))
 
   /** (id, v, nrm) — every node exactly once (tbl=0 slice: partition
     * pruning reads 1/tables of the assignment). */
-  private def loadNodes(spark: SparkSession, dir: String): DataFrame =
-    loadBuckets(spark, dir).where(col("tbl") === 0)
+  private def loadNodes(spark: SparkSession, dir: String, vecType: String): DataFrame =
+    loadBuckets(spark, dir, vecType).where(col("tbl") === 0)
       .select(col("id"), col("v"), col("nrm"))
 
   /** The deterministic PQ codebook shared with the fused
@@ -199,6 +240,7 @@ object GraphAnnIndex {
     val spark = emb.sparkSession
     val nRows = emb.count()
     val bits = if (nbits > 0) nbits else Similarity.autoBits(nRows)
+    val vecType = emb.schema(vecCol).dataType.catalogString
     // round 15 (guide §2.2): the build is a chain of ~8 jobs over
     // corpus-derived tables; size their shuffles from the corpus row
     // count (clamped to session parallelism) instead of paying the
@@ -213,8 +255,8 @@ object GraphAnnIndex {
     // everything below reads the PERSISTED assignment — the build
     // verifies its own bytes, and the lineage never recomputes the
     // hash job (at 100 TB that job is the thing you only run once)
-    val bk = loadBuckets(spark, dir)
-    val nodes = loadNodes(spark, dir)
+    val bk = loadBuckets(spark, dir, vecType)
+    val nodes = loadNodes(spark, dir, vecType)
     // the id-bucketed vector table: the full-precision RERANK's
     // partition-pruned fetch path (nb isin + id isin)
     nodes.withColumn("nb", pmod(col("id"), lit(pBuckets.toLong)))
@@ -251,7 +293,7 @@ object GraphAnnIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/entries")
     fs(spark, dir).delete(new Path(s"$dir/retired"), true)
     writeMeta(spark, dir, Meta(m, tables, bits, dim, pBuckets, entryCap,
-      pqM, nCodes, ZoneCache.corpusFingerprint(emb), Nil))
+      pqM, nCodes, ZoneCache.corpusFingerprint(emb), Nil, vecType))
     }
   }
 
@@ -300,8 +342,8 @@ object GraphAnnIndex {
   private def deletedDf(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = new Path(s"$dir/deleted")
     if (!fs(spark, dir).exists(p)) None
-    else Some(spark.read.option("recursiveFileLookup", "true")
-      .parquet(p.toString).select(col("id").cast("long")).distinct())
+    else Some(spark.read.schema("id bigint").option("recursiveFileLookup", "true")
+      .parquet(p.toString).distinct())
   }
 
   /** The delete mask, SIZED before any driver materialization (the
@@ -335,18 +377,17 @@ object GraphAnnIndex {
   private def retiredDf(spark: SparkSession, dir: String, gens: Int): Option[DataFrame] = {
     val p = new Path(s"$dir/retired")
     if (!fs(spark, dir).exists(p)) None
-    else Some(spark.read.option("recursiveFileLookup", "true").parquet(p.toString)
+    else Some(spark.read.schema("owner bigint, before_gen int")
+      .option("recursiveFileLookup", "true").parquet(p.toString)
       .where(col("before_gen") <= gens)
       .groupBy(col("owner")).agg(max(col("before_gen")).as("r_gen"))
       .select(col("owner").as("r_owner"), col("r_gen")))
   }
 
-  private def loadEdges(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/edges")
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        col("dv"), col("dnrm"), col("dcodes"), col("kind"),
-        col("owner").cast("long"), col("gen").cast("int"),
-        col("pb").cast("long"))
+  private def loadEdges(spark: SparkSession, dir: String, vecType: String): DataFrame =
+    spark.read.schema(edgeSchema(vecType)).parquet(s"$dir/edges")
+      .select(col("src"), col("dst"), col("dv"), col("dnrm"), col("dcodes"), col("kind"),
+        col("owner"), col("gen"), col("pb"))
 
   /** Edges with retired generations masked out. Heals a torn
     * compaction first — a sealed stage left by a dead maintainer is
@@ -368,8 +409,9 @@ object GraphAnnIndex {
   private def liveEdges(spark: SparkSession, dir: String,
                         metaOpt: Option[Meta] = None): DataFrame = {
     recoverCompaction(spark, dir)
-    val gens = metaOpt.getOrElse(readMeta(spark, dir)).appliedFps.size
-    val all = loadEdges(spark, dir).where(col("gen") <= gens)
+    val meta = metaOpt.getOrElse(readMeta(spark, dir))
+    val gens = meta.appliedFps.size
+    val all = loadEdges(spark, dir, meta.vecType).where(col("gen") <= gens)
     retiredDf(spark, dir, gens) match {
       case None => all
       case Some(ret) =>
@@ -393,32 +435,263 @@ object GraphAnnIndex {
     * qv) — external vectors; the corpus is never read. Bit-identical
     * to [[Similarity.graphTopK]] on the same corpus and parameters:
     * same candidate sets, same 6-dp rounding, same (sim DESC, node)
-    * ties. */
+    * ties. One sizing-and-fetch `limit` collect of the queries picks
+    * the regime: batches with `nq·max(beam, entries)` within
+    * `maxDriverFrontier` walk on the driver ([[walkOnDriver]]), larger
+    * ones walk the distributed frontier ([[walkDistributed]]). */
   def search(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int = 10, beam: Int = 32, steps: Int = 8, entries: Int = 16,
              maxDriverFrontier: Int = 100000,
              maxBroadcastFrontier: Long = 1000000L,
-             candidateFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val meta = readMeta(spark, dir)
+             candidateFilter: Option[Column] = None): DataFrame =
+    searchWith(spark, dir, readMeta(spark, dir), queries, k, beam, steps, entries,
+      maxDriverFrontier, maxBroadcastFrontier, candidateFilter)
+
+  private def searchWith(spark: SparkSession, dir: String, meta: Meta, queries: DataFrame,
+                         k: Int, beam: Int, steps: Int, entries: Int,
+                         maxDriverFrontier: Int, maxBroadcastFrontier: Long,
+                         candidateFilter: Option[Column]): DataFrame = {
     // node-level delete tombstones mask AUTOMATICALLY on every serve
     // path — a deleted vector must never be returned, whoever calls
     val delMask = deleteMask(spark, dir)
-    // pin the live edge table for the duration of the search: a
-    // serving process holds its edge working set in the block cache
-    // (RAM/SSD — the HNSW/DiskANN residency model), so the `steps`
-    // probes hit memory, not parquet listings. persist() keeps the
-    // LOGICAL plan (lineage still reads only index bytes — the
-    // GraphAnnSpec input-file pin holds); unpersist below is
-    // non-blocking, and any post-return consumer of the lazy result
-    // simply re-reads its one pruned slice from disk.
     val edges = liveEdges(spark, dir, Some(meta))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val q = queries
-      .select(col("query_id").cast("long"), col("qv"), norm(col("qv")).as("qnrm"))
+    // round 0's entry points: deleted entries are excluded from ROUND 0
+    // (unlike the metadata candidateFilter, which starts at round 1):
+    // this is what makes the masked serve bit-equal to the
+    // post-compaction serve — in the reclaimed layout the entry row is
+    // physically gone, so its out-edges must not seed the walk here
+    // either
+    val ent = maskDeleted(readEntries(spark, dir, meta.vecType)
+      .where(col("id") < math.min(entries, meta.entryCap)), "id", delMask)
+    val q = queries.select(col("query_id").cast("long"), col("qv"))
+    // ONE job sizes AND fetches the batch (the deleteMask pattern):
+    // at most qCap+1 rows come back, and qCap+1 means "too many for
+    // the driver" — the frontier bound nq·max(beam, entries) would
+    // exceed maxDriverFrontier
+    val qCap =
+      if (maxDriverFrontier < 0) -1
+      else math.min(maxDriverFrontier / math.max(1, math.max(beam, entries)), Int.MaxValue - 1)
+    val qRows = q.limit(qCap + 1).collect()
+    val walked =
+      if (qRows.length <= qCap)
+        walkOnDriver(spark, meta, edges, ent, qRows, q.schema("qv").dataType,
+          beam, steps, candidateFilter, delMask)
+      else
+        walkDistributed(meta, edges, ent, q, beam, steps, entries,
+          maxBroadcastFrontier, candidateFilter, delMask)
+    // the final candidate union still carries duplicate (query, node)
+    // rows (identical sims) — the DISTINCT-id rank dedups them inside
+    // the one top-k exchange
+    Similarity.rankTopK(
+      walked.where(col("node") =!= col("query_id"))
+        .select(col("query_id"), col("node").as("neighbor_id"), col("sim")), k,
+      dedup = true)
+  }
+
+  /** The (query_id, node, sim) rows a beam step scores and cuts. */
+  private val ScoreSchema = StructType(Seq(StructField("query_id", LongType),
+    StructField("node", LongType), StructField("sim", DoubleType)))
+
+  /** A candidate's score in SQL, over (qv, qnrm) and (dv, dnrm). */
+  private val SimCol =
+    round(cosinePrenormed(dot(col("qv"), col("dv")), col("qnrm"), col("dnrm")), 6).as("sim")
+
+  /** The walk's scorer, evaluated outside SQL: exactly
+    * `round(cosinePrenormed(dot(q, d), qnrm, dnrm), 6)` — the same
+    * [[NativeExprs.dotProductEval]] fold, the `nzProduct` NULL for a
+    * zero-norm side (null here; [[TopKAgg]] drops it the same way)
+    * and Spark's double `round` (6-dp HALF_UP over the shortest
+    * decimal repr). GraphAnnWalkSpec pins it bit-equal to the SQL form. */
+  private[graft] def walkSim(q: ArrayData, qFloat: Boolean, qnrm: Double,
+                             d: ArrayData, dFloat: Boolean, dnrm: Double): java.lang.Double = {
+    val p = qnrm * dnrm
+    if (p == 0.0) null
+    else {
+      val c = NativeExprs.dotProductEval(q, d, qFloat, dFloat) / p
+      if (c.isNaN || c.isInfinite) c
+      else java.math.BigDecimal.valueOf(c)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    }
+  }
+
+  private def isFloatVec(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  /** One out-edge in the search-time adjacency cache. */
+  private final case class Edge(dst: Long, dv: ArrayData, dnrm: Double)
+
+  /** The query batch as the step tasks read it. */
+  private final case class QueryBatch(ids: Array[Long], vecs: Array[ArrayData],
+                                      isFloat: Boolean, nrms: Array[Double])
+
+  /** `candidateFilter` resolved once against (query_id, node, sim) and
+    * bound to those ordinals, for evaluation outside a SQL plan. */
+  private def boundFilter(spark: SparkSession, filter: Column): Expression = {
+    val analyzed = spark.createDataFrame(java.util.Collections.emptyList[Row](), ScoreSchema)
+      .where(filter).queryExecution.analyzed
+    val f = ReplaceExpressions(analyzed).collectFirst { case f: Filter => f }.get
+    BindReferences.bindReference(f.condition, f.child.output)
+  }
+
+  private def predicate(filter: Option[Expression]): Option[BasePredicate] =
+    filter.map { e =>
+      val p = Predicate.create(e)
+      p.initialize(Option(TaskContext.get()).fold(0)(_.partitionId()))
+      p
+    }
+
+  /** Does (qid, node, sim) pass the filter? `row` is scratch space. */
+  private def passes(pred: Option[BasePredicate], row: SpecificInternalRow,
+                     qid: Long, node: Long, sim: Double): Boolean =
+    pred.forall { p =>
+      row.setLong(0, qid); row.setLong(1, node); row.setDouble(2, sim)
+      p.eval(row)
+    }
+
+  /** One beam step over this task's adjacency partitions: expand each
+    * query's frontier, score the out-edges, filter, and cut to the
+    * query's top-`beam` distinct nodes (the [[TopKAgg]] order). */
+  private def stepTask(parts: Iterator[LongMap[Array[Edge]]], qs: QueryBatch,
+                       frontier: Array[Array[Long]], dFloat: Boolean, beam: Int,
+                       filter: Option[Expression]): Array[Array[(Double, Long)]] = {
+    val pred = predicate(filter)
+    val row = new SpecificInternalRow(ScoreSchema.map(_.dataType))
+    val out = Array.fill(qs.ids.length)(ArrayBuffer.empty[(Double, Long)])
+    parts.foreach { adj =>
+      var i = 0
+      while (i < qs.ids.length) {
+        if (qs.vecs(i) != null) frontier(i).foreach { u =>
+          adj.get(u).foreach(_.foreach { e =>
+            val s = walkSim(qs.vecs(i), qs.isFloat, qs.nrms(i), e.dv, dFloat, e.dnrm)
+            if (s != null && passes(pred, row, qs.ids(i), e.dst, s)) out(i) += ((s, e.dst))
+          })
+        }
+        i += 1
+      }
+    }
+    out.map(TopKAgg.cut(_, beam, dedupIds = true).toArray)
+  }
+
+  /** The driver regime: the query batch and each step's frontier
+    * (≤ nq·max(beam, entries) rows) live on the driver. Round 0 scores
+    * entries × queries on the driver; steps 1 to steps-1 are ONE
+    * `runJob` each over a per-search cached adjacency RDD (src → its
+    * live, delete-masked out-edges with `dv`/`dnrm` inline, built from
+    * the first step's scan of the live edge table), with the queries
+    * and the frontier shipped by broadcast; each task cuts a per-query
+    * top-`beam` and the driver merges those lists with the frontier
+    * rows. The last step stays a lazy plan — a pb/src-pruned edge scan
+    * joined to the frontier and query relations — so the result keeps
+    * an index-only lineage. Returns the last step's (query_id, node,
+    * sim) candidate union. */
+  private def walkOnDriver(spark: SparkSession, meta: Meta, edges: DataFrame,
+                           ent: DataFrame, qRows: Array[Row], qvType: DataType,
+                           beam: Int, steps: Int, candidateFilter: Option[Column],
+                           delMask: Option[Either[Array[Long], DataFrame]]): DataFrame = {
+    val sc = spark.sparkContext
+    val nq = qRows.length
+    val qIds = qRows.map(_.getLong(0))
+    val toQ = CatalystTypeConverters.createToCatalystConverter(qvType)
+    val qVecs = qRows.map(r => toQ(r.get(1)).asInstanceOf[ArrayData])
+    val qFloat = isFloatVec(qvType)
+    val qNrms = qVecs.map(v =>
+      if (v == null) Double.NaN else math.sqrt(NativeExprs.dotProductEval(v, v, qFloat, qFloat)))
+    val vType = DataType.fromDDL(meta.vecType)
+    val dFloat = isFloatVec(vType)
+    val toD = CatalystTypeConverters.createToCatalystConverter(vType)
+    // round 0: every (query, entry) pair, NULL sims kept — an entry
+    // with an undefined cosine is still expanded at step 1
+    val entRows = ent.select(col("id"), col("v"), col("nrm")).collect()
+    var frontier: Array[Array[(Long, java.lang.Double)]] = Array.tabulate(nq) { i =>
+      entRows.map { r =>
+        val v = toD(r.get(1)).asInstanceOf[ArrayData]
+        r.getLong(0) -> (if (qVecs(i) == null || v == null || r.isNullAt(2)) null
+                         else walkSim(qVecs(i), qFloat, qNrms(i), v, dFloat, r.getDouble(2)))
+      }
+    }
+    val filter = candidateFilter.map(boundFilter(spark, _))
+    if (steps > 1) {
+      val pred = predicate(filter)
+      val row = new SpecificInternalRow(ScoreSchema.map(_.dataType))
+      val cached = maskDeleted(edges.select(col("src"), col("dst"), col("dv"), col("dnrm")),
+          "dst", delMask)
+        .queryExecution.toRdd.mapPartitions { rows =>
+          val bySrc = LongMap.empty[ArrayBuffer[Edge]]
+          rows.foreach { r =>
+            // a NULL vector or norm scores NULL, which every cut drops
+            if (!r.isNullAt(2) && !r.isNullAt(3))
+              bySrc.getOrElseUpdate(r.getLong(0), ArrayBuffer.empty) +=
+                Edge(r.getLong(1), r.getArray(2).copy(), r.getDouble(3))
+          }
+          Iterator.single(bySrc.mapValuesNow(_.toArray))
+        }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val qB = sc.broadcast(QueryBatch(qIds, qVecs, qFloat, qNrms))
+      try (1 until steps).foreach { _ =>
+        val fB = sc.broadcast(frontier.map(_.map(_._1)))
+        val parts = sc.runJob(cached, (it: Iterator[LongMap[Array[Edge]]]) =>
+          stepTask(it, qB.value, fB.value, dFloat, beam, filter))
+        fB.destroy()
+        // the candidate union also holds the frontier rows themselves,
+        // filtered like every candidate (round-0 entries included)
+        frontier = Array.tabulate(nq) { i =>
+          val buf = ArrayBuffer.empty[(Double, Long)]
+          frontier(i).foreach { case (n, s) =>
+            if (s != null && passes(pred, row, qIds(i), n, s)) buf += ((s.doubleValue, n))
+          }
+          parts.foreach(buf ++= _(i))
+          TopKAgg.cut(buf, beam, dedupIds = true).map { case (s, n) => n -> Double.box(s) }.toArray
+        }
+      } finally {
+        cached.unpersist(blocking = false)
+        qB.destroy()
+      }
+    }
+    val frontRel = spark.createDataFrame(java.util.Arrays.asList(
+      (for (i <- 0 until nq; (n, s) <- frontier(i)) yield Row(qIds(i), n, s)): _*), ScoreSchema)
+    if (steps < 1) return frontRel
+    // the last step: the frontier is model-sized and ON the driver, so
+    // the edge scan prunes STATICALLY — partition isin on pb, row-group
+    // isin on src
+    val nodes = frontier.flatMap(_.map(_._1)).distinct
+    val pbs = nodes.map(n => Math.floorMod(n, meta.pBuckets.toLong)).distinct
+    val qRel = spark.createDataFrame(java.util.Arrays.asList(
+      qIds.indices.map(i =>
+        Row(qIds(i), qRows(i).get(1), if (qVecs(i) == null) null else qNrms(i))): _*),
+      StructType(Seq(StructField("query_id", LongType), StructField("qv", qvType),
+        StructField("qnrm", DoubleType))))
+    val expanded = edges.where(col("pb").isin(pbs: _*) && col("src").isin(nodes: _*))
+      .join(broadcast(frontRel.select(col("query_id"), col("node"))),
+        col("src") === col("node"))
+      .join(broadcast(qRel), Seq("query_id"))
+      .select(col("query_id"), col("dst").as("node"), SimCol)
+    // the metadata filter (the vector store's `where=` on the serving
+    // path): the walk NAVIGATES through allowed nodes only — applied
+    // to the whole candidate union each round, entry points included
+    // from round 1 on
+    val unioned = frontRel.unionByName(expanded)
+    maskDeleted(candidateFilter.fold(unioned)(unioned.where), "node", delMask)
+  }
+
+  /** The distributed regime: the frontier stays a localCheckpointed
+    * DataFrame and the query table is never collected. Returns the
+    * last step's (query_id, node, sim) candidate union. */
+  private def walkDistributed(meta: Meta, liveEdgeDf: DataFrame, ent: DataFrame,
+                              queries: DataFrame, beam: Int, steps: Int, entries: Int,
+                              maxBroadcastFrontier: Long, candidateFilter: Option[Column],
+                              delMask: Option[Either[Array[Long], DataFrame]]): DataFrame = {
+    // pin the live edge table for the walk: the pb filters sit ABOVE
+    // the cached relation, so the first probe reads the whole live
+    // edge table into the cache and the later probes hit memory, not
+    // parquet. persist() keeps the LOGICAL plan (lineage still reads
+    // only index bytes); unpersist below is non-blocking, and any
+    // post-return consumer of the lazy result re-reads from disk.
+    val edges = liveEdgeDf.persist(StorageLevel.MEMORY_AND_DISK)
+    val q = queries.select(col("query_id"), col("qv"), norm(col("qv")).as("qnrm"))
       .localCheckpoint(true)
     val nq = q.count()
-    val scoreSchema = StructType(Seq(StructField("query_id", LongType),
-      StructField("node", LongType), StructField("sim", DoubleType)))
     // every nq-proportional side is SIZE-ROUTED: broadcast below
     // `maxBroadcastFrontier` rows, sort-merge shuffle above — a
     // broadcast() collects to the driver and ships whole to every
@@ -427,101 +700,46 @@ object GraphAnnIndex {
     def sized(df: DataFrame, rows: Long): DataFrame =
       if (rows <= maxBroadcastFrontier) broadcast(df) else df.hint("merge")
     def score(cand: DataFrame): DataFrame =
-      cand.join(sized(q, nq), Seq("query_id"))
-        .select(col("query_id"), col("node"),
-          round(cosinePrenormed(dot(col("qv"), col("dv")), col("qnrm"), col("dnrm")), 6)
-            .as("sim"))
-    // round 0: the scattered entry points, scored for every query
-    // deleted entries are excluded from ROUND 0 (unlike the metadata
-    // candidateFilter, which starts at round 1): this is what makes
-    // the masked serve bit-equal to the post-compaction serve — in
-    // the reclaimed layout the entry row is physically gone, so its
-    // out-edges must not seed the walk here either
-    val ent = maskDeleted(spark.read.parquet(s"$dir/entries")
-      .select(col("id").cast("long"), col("v"), col("nrm"))
-      .where(col("id") < math.min(entries, meta.entryCap)), "id", delMask)
+      cand.join(sized(q, nq), Seq("query_id")).select(col("query_id"), col("node"), SimCol)
     var beamScored: DataFrame = score(
       q.select(col("query_id")).crossJoin(
         ent.select(col("id").as("node"), col("v").as("dv"), col("nrm").as("dnrm"))))
-    val driverSide = nq * beam <= maxDriverFrontier && nq * entries <= maxDriverFrontier
-    // the driver-side path carries the frontier ROWS between steps —
-    // one Spark job per step (the topB collect), no re-collect of the
-    // local relation it just built
-    var frontierRows: Array[Row] = null
+      .localCheckpoint(true)
     // the frontier can never exceed nq·max(beam, entries) rows — an
     // ANALYTIC bound, so size-routing costs zero extra jobs (routing
     // on it errs only toward the shuffle branch this regime prefers)
     val frontierBound = nq * math.max(beam, entries)
-    if (driverSide) {
-      frontierRows = beamScored.collect()
-      beamScored = spark.createDataFrame(
-        java.util.Arrays.asList(frontierRows: _*), scoreSchema)
-    } else beamScored = beamScored.localCheckpoint(true)
     var lastScored: DataFrame = beamScored
     (1 to steps).foreach { step =>
-      val expanded =
-        if (driverSide) {
-          // the frontier is model-sized and ON the driver: prune the
-          // edge scan STATICALLY — partition isin on pb, row-group
-          // isin on src — so a step touches O(frontier·degree) rows
-          val nodes = frontierRows.map(_.getLong(1)).distinct
-          val pbs = nodes.map(n => ((n % meta.pBuckets) + meta.pBuckets) % meta.pBuckets)
-            .distinct
-          edges.where(col("pb").isin(pbs: _*) && col("src").isin(nodes: _*))
-            .join(broadcast(beamScored.select(col("query_id"), col("node"))),
-              col("src") === col("node"))
-            .select(col("query_id"), col("dst").as("node"),
-              col("dv"), col("dnrm"))
-        } else {
-          // distributed frontier: the pb prune still applies — the
-          // frontier's distinct pb set is ≤ pBuckets rows, one cheap
-          // per-round aggregate — and the size-routed probe keeps the
-          // frontier off the driver when it outgrows the broadcast
-          // budget. Either way: one pruned edge scan per step, never
-          // the corpus.
-          val pbs = beamScored
-            .select(pmod(col("node"), lit(meta.pBuckets.toLong)).as("fpb"))
-            .distinct().collect().map(_.getLong(0))
-          sized(beamScored.select(col("query_id"), col("node")), frontierBound)
-            .join(edges.where(col("pb").isin(pbs: _*)), col("node") === col("src"))
-            .select(col("query_id"), col("dst").as("node"), col("dv"), col("dnrm"))
-        }
+      // the pb prune still applies — the frontier's distinct pb set is
+      // ≤ pBuckets rows, one cheap per-round aggregate — and the
+      // size-routed probe keeps the frontier off the driver when it
+      // outgrows the broadcast budget. One pruned edge scan per step,
+      // never the corpus.
+      val pbs = beamScored
+        .select(pmod(col("node"), lit(meta.pBuckets.toLong)).as("fpb"))
+        .distinct().collect().map(_.getLong(0))
+      val expanded = sized(beamScored.select(col("query_id"), col("node")), frontierBound)
+        .join(edges.where(col("pb").isin(pbs: _*)), col("node") === col("src"))
+        .select(col("query_id"), col("dst").as("node"), col("dv"), col("dnrm"))
       // duplicates of a (query, node) pair score IDENTICALLY (the
       // scorer is deterministic), so the per-round dedup exchanges
       // are fused into the beam cut: score everything, let the
-      // DISTINCT-id top-k aggregate dedup inside its one exchange —
-      // 1 shuffle per round where the dedup→union→dedup→topK chain
-      // paid 3 (guide §2.4: remove shuffles outright)
-      val newScored = score(expanded)
-      // the metadata filter (the vector store's `where=` on the
-      // serving path): the walk NAVIGATES through allowed nodes only
-      // — applied to the whole candidate union each round, entry
-      // points included from round 1 on
+      // DISTINCT-id top-k aggregate dedup inside its one exchange
       val unioned = beamScored.select(col("query_id"), col("node"), col("sim"))
-        .unionByName(newScored)
+        .unionByName(score(expanded))
       val scoredRound = maskDeleted(
           candidateFilter.fold(unioned)(unioned.where), "node", delMask)
       lastScored = scoredRound
-      if (step < steps) {
-        val topB = scoredRound.groupBy(col("query_id"))
-          .agg(graft.plans.TopKAgg.topKDistinct(col("sim"), col("node"), beam).as("top"))
+      if (step < steps)
+        beamScored = scoredRound.groupBy(col("query_id"))
+          .agg(TopKAgg.topKDistinct(col("sim"), col("node"), beam).as("top"))
           .select(col("query_id"), explode(col("top")).as("t"))
           .select(col("query_id"), col("t.id").as("node"), col("t.score").as("sim"))
-        if (driverSide) {
-          frontierRows = topB.collect()
-          beamScored = spark.createDataFrame(
-            java.util.Arrays.asList(frontierRows: _*), scoreSchema)
-        } else beamScored = topB.localCheckpoint(true)
-      }
+          .localCheckpoint(true)
     }
     edges.unpersist(false)
-    // the final candidate union still carries duplicate (query, node)
-    // rows (identical sims) — the DISTINCT-id rank dedups them inside
-    // the one top-k exchange
-    Similarity.rankTopK(
-      lastScored.where(col("node") =!= col("query_id"))
-        .select(col("query_id"), col("node").as("neighbor_id"), col("sim")), k,
-      dedup = true)
+    lastScored
   }
 
   /** Self-query serving: queries are the index's own lowest
@@ -534,11 +752,12 @@ object GraphAnnIndex {
     // the query frame below reads entries/ BEFORE search() runs its
     // own recovery — heal a torn reclaim swap first
     recoverCompaction(spark, dir)
-    search(spark, dir,
-      spark.read.parquet(s"$dir/entries")
-        .select(col("id").cast("long").as("query_id"), col("v").as("qv"))
+    val meta = readMeta(spark, dir)
+    searchWith(spark, dir, meta,
+      readEntries(spark, dir, meta.vecType)
+        .select(col("id").as("query_id"), col("v").as("qv"))
         .where(col("query_id") < nQueries),
-      k, beam, steps, entries, maxDriverFrontier, maxBroadcastFrontier)
+      k, beam, steps, entries, maxDriverFrontier, maxBroadcastFrontier, None)
   }
 
   /** PQ-compressed serving over the SAME persisted layout (the
@@ -605,8 +824,8 @@ object GraphAnnIndex {
             acc -> acc) as double)""").as("sim"))
     // entry payloads: one model-sized fetch + frozen-codebook encode
     // (deterministic — identical to the stored codes)
-    val ent = maskDeleted(spark.read.parquet(s"$dir/entries")
-      .select(col("id").cast("long"), col("v"))
+    val ent = maskDeleted(readEntries(spark, dir, meta.vecType)
+      .select(col("id"), col("v"))
       .where(col("id") < math.min(entries, meta.entryCap)), "id", delMask)
     val entC = ent.join(pqCodesArr(ent, cb, meta.pqM, subDim), Seq("id"))
       .select(col("id").as("node"), col("codes").as("dcodes"))
@@ -934,7 +1153,7 @@ object GraphAnnIndex {
     val newAssign = Similarity
       .bucketAssign(newEmb, meta.nBits, meta.tables, meta.dim, idCol, vecCol)
       .localCheckpoint(true) // increment-sized; hashed once
-    val oldAssign = loadBuckets(spark, dir)
+    val oldAssign = loadBuckets(spark, dir, meta.vecType)
     val grown = oldAssign.unionByName(newAssign.select(
       col("id"), col("v"), col("nrm"), col("tbl"), col("bucket")))
     val affBuckets = newAssign.select(col("tbl"), col("bucket")).distinct()
@@ -1031,7 +1250,11 @@ object GraphAnnIndex {
     // they have no earlier generations), then commit via meta
     affNodes.select(col("id").as("owner"), lit(gen).as("before_gen"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/retired/ret-$fp8")
-    writeMeta(spark, dir, meta.copy(appliedFps = meta.appliedFps :+ fp))
+    // a double increment into a float index unions to double files
+    // (the widening `grown` does); float files then read widened too
+    val vecType = newEmb.schema(vecCol).dataType.catalogString
+    writeMeta(spark, dir, meta.copy(appliedFps = meta.appliedFps :+ fp,
+      vecType = if (vecType == meta.vecType) vecType else "array<double>"))
     true
     }
   }

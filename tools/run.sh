@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a graft main class without sbt startup overhead.
-# Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
+# Usage: tools/run.sh graft.Verify <sf-dir> <out-dir>
 set -e
+# the classes of the checkout this script lives in, wherever it is
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -13,4 +15,4 @@ done
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$CLASSES:/opt/spark/jars/*" "$@"
