@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.functions.TextFunctions.tokens
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** BPE tokenizer TRAINING — the multi-round merge loop, distributed
   * (`txt_bpe_pairs` is one round of pair counting; this is the
@@ -12,19 +15,20 @@ import org.apache.spark.sql.functions._
   *  - the corpus is tokenized ONCE into a (word, freq) vocabulary
   *    and never touched again — every merge round runs over the
   *    vocabulary, which is orders of magnitude smaller than the
-  *    corpus (the standard trainer optimization); the vocab is
-  *    eagerly localCheckpoint'ed so round r never re-derives rounds
-  *    1..r-1 lazily from the corpus;
-  *  - each round: adjacent symbol pairs explode out of the symbol
-  *    sequences, counts aggregate weighted by word frequency
-  *    (partial map-side combine), and exactly ONE row — the winning
-  *    pair — reaches the driver; ties break (count desc, left asc,
-  *    right asc) so training is deterministic on any partitioning;
-  *  - the merge applies map-side as a literal string replace over
+  *    corpus (the standard trainer optimization); the vocab RDD is
+  *    persisted and its lineage re-sealed every 8 rounds, so round r
+  *    never re-derives rounds 1..r-1 from the corpus;
+  *  - each round is ONE Spark job: adjacent symbol pairs flatMap out
+  *    of the symbol sequences, counts reduceByKey weighted by word
+  *    frequency (map-side combine), and takeOrdered brings the top-K
+  *    pairs to the driver in canonical order (count desc, left asc,
+  *    right asc), so training is deterministic on any partitioning;
+  *  - the merge applies map-side as a literal String.replace over
   *    `|`-wrapped symbol sequences (`|a||b|` → `|ab|`): wrapped
   *    symbols never share delimiter characters, so replace-all is
-  *    exactly the canonical merge-ALL-occurrences step, identically
-  *    in Spark and the DuckDB oracle replay.
+  *    exactly the canonical merge-ALL-occurrences step — the same
+  *    left-to-right, non-overlapping replace as the SQL `replace`
+  *    of the serving encoder and the DuckDB oracle replay.
   *
   * Words are restricted to lowercase letter runs so the `|`
   * delimiter cannot collide with symbol text.
@@ -83,6 +87,16 @@ object Bpe {
         u => u.isNotNull)
     }
 
+  /** The canonical candidate order: count desc, left asc, right asc.
+    * Symbols are `[a-z]+`, where Java String order is Spark's byte
+    * order. */
+  private val Canonical: Ordering[(String, String, Long)] =
+    Ordering.by[(String, String, Long), (Long, String, String)] { case (a, b, n) => (-n, a, b) }
+
+  /** The symbols of a `|`-wrapped sequence: `|ab||c|` → [ab, c]. */
+  private def symbols(seq: String): Array[String] =
+    seq.substring(1, seq.length - 1).split("\\|\\|")
+
   /** The shared training loop: returns the merge log, the final
     * vocabulary (w, freq, seq) it produced, and the number of Spark
     * ROUNDS it took — one implementation behind the trainer and the
@@ -113,36 +127,44 @@ object Bpe {
     *    tail could hide such a pair).
     *
     * Accepted merges touch disjoint symbols, so their replaces
-    * compose into ONE projection per round; rounds collapse ~K-fold
-    * on natural text where top pairs rarely collide, while a 32k-
-    * merge production vocabulary no longer means 32k Spark jobs. */
+    * compose into ONE map per round; rounds collapse ~K-fold on
+    * natural text where top pairs rarely collide, while a 32k-merge
+    * production vocabulary no longer means 32k Spark jobs.
+    *
+    * The vocabulary is one SQL aggregation; the rounds run on it as
+    * an RDD of (w, freq, seq), ONE job each (reduceByKey +
+    * takeOrdered). The final vocabulary stays persisted for the
+    * caller; `release` drops it. */
   private def trainLoop(docs: DataFrame, nMerges: Int, contentCol: String,
-                        maxGram: Int = 1)
-      : (Seq[(Long, String, String, String, Long)], DataFrame, Int) = {
+                        maxGram: Int = 1): Trainer = {
     val vocab0 = docs
       .select(explode(unitsOf(col(contentCol), maxGram)).as("w"))
       .where(col("w").rlike("^[a-z]+$"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .withColumn("seq", regexp_replace(col("w"), "(.)", "|$1|"))
-      .localCheckpoint(true) // corpus touched once; rounds run on the vocab
-    var vocab = vocab0
+      .queryExecution.toRdd
+      .map(r => (r.getUTF8String(0).toString, r.getLong(1), r.getUTF8String(2).toString))
+    // the persisted vocabularies, newest last: the corpus is touched
+    // once (round 1 fills the first), and a re-sealed one replaces
+    // its predecessors once a round has read through it
+    val held = scala.collection.mutable.ArrayBuffer[RDD[(String, Long, String)]](
+      vocab0.persist(StorageLevel.MEMORY_AND_DISK))
+    var vocab = held.last
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     var rounds = 0
     var sinceCheckpoint = 0
+    def result = new Trainer(merges.toSeq, rounds, vocab, held.toSeq)
     while (merges.size < nMerges) {
-      val tk = split(expr("trim(BOTH '|' FROM seq)"), "\\|\\|")
-      val withTk = vocab.select(col("freq"), tk.as("tk")).where(size(col("tk")) >= 2)
-      val top = withTk.select(col("freq"),
-        explode(zip_with(
-          slice(col("tk"), lit(1), size(col("tk")) - 1),
-          slice(col("tk"), lit(2), size(col("tk")) - 1),
-          (a, b) => struct(a.as("a"), b.as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .limit(TopK).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (top.isEmpty) return (merges.toSeq, vocab, rounds)
+      val top = vocab
+        .flatMap { case (_, freq, seq) =>
+          val tk = symbols(seq)
+          (0 until tk.length - 1).iterator.map(j => ((tk(j), tk(j + 1)), freq))
+        }
+        .reduceByKey(_ + _)
+        .map { case ((a, b), n) => (a, b, n) }
+        .takeOrdered(TopK)(Canonical)
+      while (held.size > 1) held.remove(0).unpersist(blocking = false)
+      if (top.isEmpty) return result
       rounds += 1
       val sawAllPairs = top.length < TopK
       val tailCount = top.last._3
@@ -178,25 +200,35 @@ object Bpe {
         }
         j += 1
       }
-      // disjoint symbols: the replaces commute; compose them into one
-      // projection and one vocab pass for the whole batch
-      val replaced = accepted.foldLeft("seq") { case (e, (a, b, _)) =>
-        s"replace($e, '|$a||$b|', '|$a$b|')"
-      }
+      // disjoint symbols: the replaces commute; apply them map-side in
+      // acceptance order — String.replace is SQL replace's left-to-
+      // right, non-overlapping replace-all
+      val replaces = accepted.map { case (a, b, _) => (s"|$a||$b|", s"|$a$b|") }.toArray
       accepted.foreach { case (a, b, n) =>
         merges += (((merges.size + 1).toLong, a, b, a + b, n))
       }
-      vocab = vocab.withColumn("seq", expr(replaced))
+      vocab = vocab.map { case (w, freq, seq) =>
+        (w, freq, replaces.foldLeft(seq) { case (s, (from, to)) => s.replace(from, to) })
+      }
       // the scaled trainer runs ~90 rounds: re-seal the lineage every
-      // few rounds so the lazy plan never stacks more than a handful
-      // of nested-replace projections (analysis cost, not data cost)
+      // few rounds (the next round's job fills the checkpoint) so a
+      // task never ships a long chain of merge maps
       sinceCheckpoint += 1
       if (sinceCheckpoint >= 8 && merges.size < nMerges) {
-        vocab = vocab.localCheckpoint(true)
+        vocab = vocab.localCheckpoint()
+        held += vocab
         sinceCheckpoint = 0
       }
     }
-    (merges.toSeq, vocab, rounds)
+    result
+  }
+
+  /** A finished training: the merge log, the round count, the final
+    * vocabulary and the persisted RDDs it reads. */
+  private final class Trainer(val merges: Seq[(Long, String, String, String, Long)],
+                              val rounds: Int, val vocab: RDD[(String, Long, String)],
+                              held: Seq[RDD[_]]) {
+    def release(): Unit = held.foreach(_.unpersist(blocking = false))
   }
 
   // One training serves every consumer (txt_bpe_train/encode,
@@ -229,8 +261,9 @@ object Bpe {
   private def trainedMerges(docs: DataFrame, nMerges: Int,
                             contentCol: String, maxGram: Int): TrainedMerges = {
     def fresh(): TrainedMerges = {
-      val (m, _, r) = trainLoop(docs, nMerges, contentCol, maxGram)
-      TrainedMerges(m, r)
+      val t = trainLoop(docs, nMerges, contentCol, maxGram)
+      t.release()
+      TrainedMerges(t.merges, t.rounds)
     }
     if (docs.inputFiles.isEmpty) return fresh()
     val key = Seq(
@@ -318,10 +351,8 @@ object Bpe {
   def encodeWith(df: DataFrame, merges: Seq[(String, String)],
                  contentCol: String = "text",
                  broadcastTypesMax: Long = 1000000L): DataFrame = {
-    // the replay splices merge symbols into SQL `replace` literals:
     // enforce the trainer's documented [a-z]+ alphabet at the public
-    // entry so a quote/pipe/backslash can never break parsing or
-    // silently mis-segment
+    // entry: a pipe inside a symbol would silently mis-segment
     require(merges.forall { case (a, b) =>
         a.matches("[a-z]+") && b.matches("[a-z]+") },
       "BPE merges must be lowercase-letter symbols (the trainer's alphabet)")
@@ -330,11 +361,13 @@ object Bpe {
       .where(col("w").rlike("^[a-z]+$"))
     val types = words.select(col("w")).distinct()
       .withColumn("seq", regexp_replace(col("w"), "(.)", "|$1|"))
-    val replayed = merges.foldLeft("seq") { case (e, (a, b)) =>
-      s"replace($e, '|$a||$b|', '|$a$b|')"
+    // built as Columns, not SQL text: a 256-deep nested `replace`
+    // string overflows the SQL parser's stack
+    val replayed = merges.foldLeft(col("seq")) { case (e, (a, b)) =>
+      replace(e, lit(s"|$a||$b|"), lit(s"|$a$b|"))
     }
-    val enc = types.select(col("w"),
-        split(expr(s"trim(BOTH '|' FROM $replayed)"), "\\|\\|").as("pieces"))
+    val enc = types.select(col("w"), replayed.as("seq"))
+      .select(col("w"), split(expr("trim(BOTH '|' FROM seq)"), "\\|\\|").as("pieces"))
       .localCheckpoint(true)
     val routed = if (enc.count() <= broadcastTypesMax) broadcast(enc) else enc
     words.join(routed, "w")
@@ -412,7 +445,10 @@ object Bpe {
     * vocabulary; corpus still touched exactly once. */
   def bpeSegmentStats(docs: DataFrame, nMerges: Int = 4,
                       contentCol: String = "text"): DataFrame = {
-    val (_, vocab, _) = trainLoop(docs, nMerges, contentCol)
+    val vocab = docs.sparkSession.createDataFrame(
+      trainLoop(docs, nMerges, contentCol).vocab.map { case (w, f, s) => Row(w, f, s) },
+      StructType(Seq(StructField("w", StringType), StructField("freq", LongType, nullable = false),
+        StructField("seq", StringType))))
     val ntok = size(split(expr("trim(BOTH '|' FROM seq)"), "\\|\\|")).cast("long")
     vocab.agg(
       count(lit(1)).as("n_word_types"),

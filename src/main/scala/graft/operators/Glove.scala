@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.functions.HashFunctions
 import graft.functions.TextFunctions.tokens
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Corpus-trained word embeddings — GloVe (Pennington, Socher &
   * Manning, EMNLP 2014) as a fully deterministic, oracle-replayable
@@ -24,16 +25,22 @@ import org.apache.spark.sql.types.StructType
   *      reduced to the X_ij matrix with one shuffle keyed on
   *      (i, j). At 100 TB this is the only big job, and it is one
   *      explode + one partially-aggregated groupBy.
-  *   2. TRAINING (model-scale, iterated): X is at most V² rows; the
-  *      AdaGrad loop joins it against V·dim-row state tables. Every
-  *      step is a handful of broadcast-sized joins — the driver
-  *      never holds the corpus, and the loop cost is independent of
-  *      corpus size.
+  *   2. TRAINING (model-scale, iterated): X is at most V² rows,
+  *      persisted once as a per-partition columnar pair table. The
+  *      model (W, C and the biases, V·dim doubles) lives on the
+  *      driver — the MLlib Word2Vec pattern: each AdaGrad step
+  *      broadcasts it, runs ONE mapPartitions + treeAggregate job
+  *      whose tasks return exact scaled-long gradient sums, and
+  *      applies the update on the driver. The driver never holds the
+  *      corpus, and a step costs one Spark job whatever the corpus
+  *      size.
   *
   * Determinism discipline (the emb_kmeans_update / power-iteration
   * contract, so DuckDB replays the whole trainer bit-for-bit):
   *   - every SUM whose order Spark does not define is a DECIMAL sum
-  *     of per-term ROUNDED products (order-free, exact). Scale 8,
+  *     of per-term ROUNDED products (order-free, exact; the step
+  *     kernel keeps them as unscaled longs summed with addExact, the
+  *     same integers the SQL decimal sums hold). Scale 8,
   *     deliberately not higher: DuckDB's round(x, s) computes
   *     round(x·10^s)/10^s in doubles, so at scale 10 the grid-level
   *     ulp error (~2e-7 for x≈0.1) flips boundary cases against
@@ -126,18 +133,32 @@ object Glove {
     }
 
   /** Top-`v` lowercased units by (count DESC, unit ASC), with dense
-    * rank i ∈ [0, v). The global sort is a distributed top-k
-    * (orderBy + limit); only the v survivors see the
-    * single-partition row_number window — model-sized by then. */
+    * rank i ∈ [0, v), as a LOCAL frame (w, i). The global sort is a
+    * distributed top-k (orderBy + limit); the v survivors are
+    * collected and ranked in the order Spark returned them — Spark's
+    * byte order on `w`, which Java's String order is not, so the
+    * driver never re-sorts. */
   def vocab(docs: DataFrame, v: Int = VocabSize,
-            contentCol: String = "text", maxGram: Int = 1): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("cnt").desc, col("w"))
-    docs.select(explode(unitsOf(col(contentCol), maxGram)).as("w"))
+            contentCol: String = "text", maxGram: Int = 1): DataFrame =
+    topUnits(docs, v, contentCol, maxGram).frame(docs.sparkSession)
+
+  /** The top-`v` units in rank order (index = i), and whether the unit
+    * column is nullable (the mixed-gram unit column is, the unigram
+    * one is not) so the local frame keeps the SQL form's schema. */
+  private[graft] final case class Vocab(words: Array[String], nullable: Boolean) {
+    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(words.indices.map(i => Row(words(i), i.toLong)): _*),
+      StructType(Seq(StructField("w", StringType, nullable),
+        StructField("i", LongType, nullable = false))))
+  }
+
+  private def topUnits(docs: DataFrame, v: Int, contentCol: String,
+                       maxGram: Int): Vocab = {
+    val top = docs.select(explode(unitsOf(col(contentCol), maxGram)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("w")).limit(v)
-      .withColumn("i", (row_number().over(w) - 1).cast("long"))
-      .select(col("w"), col("i"))
+      .select(col("w"))
+    Vocab(top.collect().map(_.getString(0)), top.schema.head.nullable)
   }
 
   /** The symmetric co-occurrence matrix X over the vocab: for every
@@ -202,7 +223,7 @@ object Glove {
   /** X with its run constants: f = min((x/xmax)^0.75, 1) and ln x,
     * both rounded to 6 dp at birth (pow/ln are the only ops whose
     * low bits differ across engines). */
-  private def pairsWithConstants(x: DataFrame): DataFrame = {
+  private[graft] def pairsWithConstants(x: DataFrame): DataFrame = {
     val xmax = x.agg(max(col("x")).as("xmax"))
     x.crossJoin(broadcast(xmax))
       .select(col("ia"), col("ib"),
@@ -213,7 +234,7 @@ object Glove {
 
   /** md5-seeded init in [−0.05, 0.05): one value per (word, dim),
     * identical arithmetic to the oracle's replay. */
-  private def seeded(salt: String): Column =
+  private[graft] def seeded(salt: String): Column =
     (HashFunctions.md5Long(concat(lit(s"$salt:"), col("word"), lit(":"), col("k")))
       % 10000).cast("double") / lit(100000.0) - lit(0.05)
 
@@ -223,21 +244,52 @@ object Glove {
   final case class Trained(w: DataFrame, c: DataFrame, b: DataFrame,
                            vocab: DataFrame, losses: Seq[Double])
 
+  /** The driver-resident model a training produces: the vocab in rank
+    * order, every parameter in one array laid out
+    * [W (V·dim) | C (V·dim) | b (V) | bc (V)] — W and C row-major,
+    * cell i·dim + k — its AdaGrad accumulators in the same layout,
+    * and the per-step losses. Never mutated once built. */
+  private[graft] final case class Model(vocab: Vocab, dim: Int,
+                                        x: Array[Double], a: Array[Double],
+                                        losses: Seq[Double]) {
+    /** The model as [[Trained]] frames — local relations, so reading
+      * them runs no Spark job. */
+    def trained(spark: SparkSession): Trained = {
+      val nv = vocab.words.length
+      def frame(schema: StructType, rows: Seq[Row]): DataFrame =
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      def vecs(at: Int): DataFrame =
+        frame(VecSchema, for (i <- 0 until nv; k <- 0 until dim; j = at + i * dim + k)
+          yield Row(i.toLong, k, x(j), a(j)))
+      val (b, bc) = (2 * nv * dim, 2 * nv * dim + nv)
+      Trained(vecs(0), vecs(nv * dim),
+        frame(BiasSchema, (0 until nv).map(i =>
+          Row(i.toLong, x(b + i), a(b + i), x(bc + i), a(bc + i)))),
+        vocab.frame(spark), losses)
+    }
+  }
+
+  // nullability as the SQL trainer's frames had it: its AdaGrad
+  // updates were nullable divisions, its accumulators sums of squares
+  private val VecSchema = StructType(Seq(
+    StructField("i", LongType, nullable = false), StructField("k", IntegerType, nullable = false),
+    StructField("v", DoubleType), StructField("a", DoubleType, nullable = false)))
+  private val BiasSchema = StructType(Seq(
+    StructField("i", LongType, nullable = false), StructField("b", DoubleType),
+    StructField("ab", DoubleType, nullable = false), StructField("c", DoubleType),
+    StructField("ac", DoubleType, nullable = false)))
+
   // One training serves every consumer (emb_glove_train/loss,
   // rag_retrieve_trained, emb_infer_trained) — the Unigram
   // chainCache discipline verbatim: keyed on (application, corpus
-  // fingerprint, canonical plan hash, params); values are COLLECTED
-  // model-sized rows, not DataFrames (cached frames pin
-  // localCheckpoint blocks that cache-hygiene sweeps destroy);
-  // in-memory inputs (no file listing to fingerprint) train fresh so
-  // specs stay isolated.
-  private final case class TrainedRows(
-      w: (StructType, Array[Row]), c: (StructType, Array[Row]),
-      b: (StructType, Array[Row]), vocab: (StructType, Array[Row]),
-      losses: Seq[Double])
+  // fingerprint, canonical plan hash, params); values are the
+  // driver-side models themselves (never DataFrames: cached frames
+  // pin blocks that cache-hygiene sweeps destroy); in-memory inputs
+  // (no file listing to fingerprint) train fresh so specs stay
+  // isolated.
   private val memoCap = 4
-  private val memo = new java.util.LinkedHashMap[String, TrainedRows](8, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, TrainedRows]): Boolean =
+  private val memo = new java.util.LinkedHashMap[String, Model](8, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Model]): Boolean =
       size > memoCap
   }
 
@@ -251,7 +303,7 @@ object Glove {
   // while a second caller on the SAME key awaits the first's result
   private val inflight =
     new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.CompletableFuture[TrainedRows]]()
+      String, java.util.concurrent.CompletableFuture[Model]]()
 
   /** Full-batch AdaGrad on the GloVe objective
     * J = Σ f(X_ij)·(wᵢ·cⱼ + bᵢ + bcⱼ − ln X_ij)², `steps` rounds.
@@ -261,134 +313,183 @@ object Glove {
             dim: Int = Dim, steps: Int = Steps, lr: Double = Lr,
             contentCol: String = "text", maxGram: Int = 1,
             termScale: Int = 8): Trained = {
-    if (docs.inputFiles.isEmpty)
-      return trainFresh(docs, v, window, dim, steps, lr, contentCol,
-        maxGram, termScale)
     val spark = docs.sparkSession
+    def fresh(): Model = trainFresh(docs, v, window, dim, steps, lr, contentCol,
+      maxGram, termScale)
+    if (docs.inputFiles.isEmpty) return fresh().trained(spark)
     val key = Seq(
       spark.sparkContext.applicationId,
       graft.sources.ZoneCache.corpusFingerprint(docs),
       docs.queryExecution.analyzed.canonicalized.semanticHash().toString,
       v, window, dim, steps, lr, contentCol, maxGram, termScale).mkString("|")
-    def memoGet: Option[TrainedRows] =
+    def memoGet: Option[Model] =
       memo.synchronized(Option(memo.get(key)))
-    def computeAndPut(): TrainedRows = {
-      val t = trainFresh(docs, v, window, dim, steps, lr, contentCol,
-        maxGram, termScale)
-      val fresh = TrainedRows(
-        (t.w.schema, t.w.collect()), (t.c.schema, t.c.collect()),
-        (t.b.schema, t.b.collect()), (t.vocab.schema, t.vocab.collect()),
-        t.losses)
-      memo.synchronized(memo.put(key, fresh))
-      fresh
-    }
-    val rows = memoGet.getOrElse {
-      val mine = new java.util.concurrent.CompletableFuture[TrainedRows]()
+    val model = memoGet.getOrElse {
+      val mine = new java.util.concurrent.CompletableFuture[Model]()
       val winner = inflight.putIfAbsent(key, mine)
       if (winner == null) {
         try {
           // double-check under the race: a concurrent trainer may have
           // finished between the memo miss and the inflight claim
-          val fresh = memoGet.getOrElse(computeAndPut())
-          mine.complete(fresh)
-          fresh
+          val got = memoGet.getOrElse {
+            val m = fresh()
+            memo.synchronized(memo.put(key, m))
+            m
+          }
+          mine.complete(got)
+          got
         } catch {
           case t: Throwable => mine.completeExceptionally(t); throw t
         } finally inflight.remove(key)
       } else winner.join() // same key already training: await its result
     }
-    def df(p: (StructType, Array[Row])): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(p._2: _*), p._1)
-    Trained(df(rows.w), df(rows.c), df(rows.b), df(rows.vocab), rows.losses)
+    model.trained(spark)
   }
 
-  private def trainFresh(docs: DataFrame, v: Int, window: Int,
-                         dim: Int, steps: Int, lr: Double,
-                         contentCol: String, maxGram: Int = 1,
-                         termScale: Int = 8): Trained = {
-    val voc = vocab(docs, v, contentCol, maxGram).localCheckpoint(true)
-    val px = pairsWithConstants(
-        coocWithVocab(docs, broadcast(voc), window, contentCol, maxGram))
-      .localCheckpoint(true) // ≤ V² rows — the whole training set
-    val ks = voc.select(col("i"), col("w").as("word"))
-      .select(col("i"), col("word"),
-        explode(sequence(lit(0), lit(dim - 1))).as("k"))
-    var wT = ks.select(col("i"), col("k"),
-      seeded("gw").as("v"), lit(0.0).as("a")).localCheckpoint(true)
-    var cT = ks.select(col("i"), col("k"),
-      seeded("gc").as("v"), lit(0.0).as("a")).localCheckpoint(true)
-    var bT = voc.select(col("i"), lit(0.0).as("b"), lit(0.0).as("ab"),
-      lit(0.0).as("c"), lit(0.0).as("ac")).localCheckpoint(true)
-    val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
-    (1 to steps).foreach { _ =>
-      // err per pair: order-free decimal dot + IEEE bias adds, then
-      // ONE round — same 6 dp the oracle applies at the same spot
-      // round 15: the factor tables are model-scale by construction
-      // (V×dim rows, V bounded by the vocab param) — broadcast them
-      // so the px×dim intermediate is never shuffled (guide §3.1)
-      val dot = px
-        .join(broadcast(wT.select(col("i").as("ia"), col("k"), col("v").as("wv"))), "ia")
-        .join(broadcast(cT.select(col("i").as("ib"), col("k"), col("v").as("cv"))), Seq("ib", "k"))
-        .groupBy(col("ia"), col("ib"), col("f"), col("logx"))
-        .agg(sum(rnd(col("wv") * col("cv"), termScale).cast("decimal(28,8)"))
-          .cast("double").as("dot"))
-      val err = dot
-        .join(broadcast(bT.select(col("i").as("ia"), col("b"))), "ia")
-        .join(broadcast(bT.select(col("i").as("ib"), col("c").as("bc"))), "ib")
-        .select(col("ia"), col("ib"), col("f"),
-          rnd(col("dot") + col("b") + col("bc") - col("logx"), 6).as("err"))
-        .withColumn("coef", rnd(lit(2.0) * col("f") * col("err"), 6))
-        .localCheckpoint(true)
-      // null-safe: a corpus with no co-occurring vocab pairs (every
-      // doc under 2 tokens) has an EMPTY err frame — its loss is 0,
-      // not an NPE out of a null SUM
-      losses += Option(err
-        .agg(sum(rnd(col("f") * col("err") * col("err"), termScale)
-          .cast("decimal(28,8)")).cast("double"))
-        .head().get(0)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-      val gw = err
-        .join(broadcast(cT.select(col("i").as("ib"), col("k"), col("v").as("cv"))), "ib")
-        .groupBy(col("ia").as("i"), col("k"))
-        .agg(sum(rnd(col("coef") * col("cv"), termScale).cast("decimal(28,8)"))
-          .cast("double").as("g"))
-      val gc = err
-        .join(broadcast(wT.select(col("i").as("ia"), col("k"), col("v").as("wv"))), "ia")
-        .groupBy(col("ib").as("i"), col("k"))
-        .agg(sum(rnd(col("coef") * col("wv"), termScale).cast("decimal(28,8)"))
-          .cast("double").as("g"))
-      val gb = err.groupBy(col("ia").as("i"))
-        .agg(sum(col("coef").cast("decimal(18,6)")).cast("double").as("g"))
-      val gbc = err.groupBy(col("ib").as("i"))
-        .agg(sum(col("coef").cast("decimal(18,6)")).cast("double").as("g"))
-      // AdaGrad: a' = a + g²; v' = v − lr·g/sqrt(a' + 1e-8). All
-      // IEEE — no re-rounding needed or wanted. A vocab word no pair
-      // touched keeps its state (g = 0 exactly).
-      def updVec(state: DataFrame, grad: DataFrame): DataFrame = state
-        .join(grad, Seq("i", "k"), "left")
-        .withColumn("g", coalesce(col("g"), lit(0.0)))
-        .select(col("i"), col("k"),
-          (col("v") - lit(lr) * col("g") /
-            sqrt(col("a") + col("g") * col("g") + lit(1e-8))).as("v"),
-          (col("a") + col("g") * col("g")).as("a"))
-        .localCheckpoint(true)
-      val w2 = updVec(wT, gw)
-      val c2 = updVec(cT, gc)
-      bT = bT
-        .join(gb.withColumnRenamed("g", "gB"), Seq("i"), "left")
-        .join(gbc.withColumnRenamed("g", "gC"), Seq("i"), "left")
-        .withColumn("gB", coalesce(col("gB"), lit(0.0)))
-        .withColumn("gC", coalesce(col("gC"), lit(0.0)))
-        .select(col("i"),
-          (col("b") - lit(lr) * col("gB") /
-            sqrt(col("ab") + col("gB") * col("gB") + lit(1e-8))).as("b"),
-          (col("ab") + col("gB") * col("gB")).as("ab"),
-          (col("c") - lit(lr) * col("gC") /
-            sqrt(col("ac") + col("gC") * col("gC") + lit(1e-8))).as("c"),
-          (col("ac") + col("gC") * col("gC")).as("ac"))
-        .localCheckpoint(true)
-      wT = w2; cT = c2
+  /** One partition of the pair table X, column-wise. */
+  private final case class PairBlock(ia: Array[Int], ib: Array[Int],
+                                     f: Array[Double], logx: Array[Double])
+
+  private val Pow10 = Array.iterate(1L, 19)(_ * 10)
+
+  /** `round(x + TieEps, s)` as Spark evaluates it on a double: HALF_UP
+    * over the shortest decimal repr (`BigDecimal.valueOf`). */
+  private[graft] def rounded(x: Double, s: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(x + TieEps).setScale(s, java.math.RoundingMode.HALF_UP)
+
+  /** [[rnd]] on one double, bit for bit. */
+  private[graft] def rndDouble(x: Double, s: Int): Double = rounded(x, s).doubleValue
+
+  /** Spark's `CAST(r.doubleValue AS DECIMAL(_, scale))` for a decimal
+    * `r` of scale ≤ `scale`, as the unscaled long. Spark parses
+    * `Double.toString` of the double, which lies within an ulp of
+    * `r`; below 10⁶ that ulp is far under half a unit at scale 8, so
+    * the parse rounds back to `r` itself and the string round trip is
+    * skipped. */
+  private def unscaledAt(r: java.math.BigDecimal, scale: Int): Long =
+    if (r.precision - r.scale <= 6) r.unscaledValue.longValue * Pow10(scale - r.scale)
+    else new java.math.BigDecimal(java.lang.Double.toString(r.doubleValue))
+      .setScale(scale, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
+
+  /** `CAST(rnd(x, s) AS DECIMAL(28, 8))` as its unscaled long — one
+    * term of the trainer's order-free decimal sums. */
+  private[graft] def termUnscaled(x: Double, s: Int): Long = unscaledAt(rounded(x, s), 8)
+
+  /** A decimal sum back to double, through Spark's own conversion. */
+  private def toDouble(unscaled: Long, scale: Int): Double =
+    Decimal(unscaled, 38, scale).toDouble
+
+  /** One step over one pair block, summed into `acc`, laid out like
+    * [[Model.x]] plus a last loss cell: the SQL step's arithmetic
+    * term for term. Every rounded term is an exact unscaled decimal
+    * (scale 8; the bias sums, which cast the 6-dp coef to
+    * DECIMAL(18,6), scale 6), summed with addExact — the integers the
+    * SQL decimal sums hold, so the result does not depend on
+    * partitioning or order. */
+  private def stepInto(acc: Array[Long], p: PairBlock, x: Array[Double],
+                       nv: Int, dim: Int, ts: Int): Array[Long] = {
+    val cAt = nv * dim
+    val bAt = 2 * nv * dim
+    val bcAt = bAt + nv
+    val lossAt = bcAt + nv
+    var j = 0
+    while (j < p.ia.length) {
+      val wo = p.ia(j) * dim
+      val co = cAt + p.ib(j) * dim
+      var dot = 0L
+      var k = 0
+      while (k < dim) {
+        dot = Math.addExact(dot, termUnscaled(x(wo + k) * x(co + k), ts))
+        k += 1
+      }
+      val f = p.f(j)
+      val err = rndDouble(toDouble(dot, 8) + x(bAt + p.ia(j)) + x(bcAt + p.ib(j)) - p.logx(j), 6)
+      val coefR = rounded(2.0 * f * err, 6)
+      val coef = coefR.doubleValue
+      acc(lossAt) = Math.addExact(acc(lossAt), termUnscaled(f * err * err, ts))
+      k = 0
+      while (k < dim) {
+        acc(wo + k) = Math.addExact(acc(wo + k), termUnscaled(coef * x(co + k), ts))
+        acc(co + k) = Math.addExact(acc(co + k), termUnscaled(coef * x(wo + k), ts))
+        k += 1
+      }
+      val cb = unscaledAt(coefR, 6)
+      acc(bAt + p.ia(j)) = Math.addExact(acc(bAt + p.ia(j)), cb)
+      acc(bcAt + p.ib(j)) = Math.addExact(acc(bcAt + p.ib(j)), cb)
+      j += 1
     }
-    Trained(wT, cT, bT, voc, losses.toSeq)
+    acc
+  }
+
+  /** Two step sums added exactly; an empty array is the zero. */
+  private def addInto(a: Array[Long], b: Array[Long]): Array[Long] =
+    if (a.isEmpty) b
+    else if (b.isEmpty) a
+    else {
+      var i = 0
+      while (i < a.length) { a(i) = Math.addExact(a(i), b(i)); i += 1 }
+      a
+    }
+
+  /** The trainer: vocab, co-occurrence and the pair constants are
+    * corpus-scale SQL, run once; each AdaGrad step is ONE Spark job —
+    * the model broadcast, a [[stepInto]] pass per pair block, a
+    * treeAggregate of the exact gradient sums — and the update runs
+    * on the driver. Leaves no persisted RDD and no live broadcast. */
+  private[graft] def trainFresh(docs: DataFrame, v: Int, window: Int,
+                                dim: Int, steps: Int, lr: Double,
+                                contentCol: String, maxGram: Int = 1,
+                                termScale: Int = 8): Model = {
+    val spark = docs.sparkSession
+    val voc = topUnits(docs, v, contentCol, maxGram)
+    val nv = voc.words.length
+    val cells = nv * dim
+    // md5 init: the `seeded` expression over the local (word, k)
+    // rows, in cell order i·dim + k; biases start at 0
+    val init = spark.createDataFrame(java.util.Arrays.asList(
+        (for (w <- voc.words.toSeq; k <- 0 until dim) yield Row(w, k)): _*),
+        StructType(Seq(StructField("word", StringType), StructField("k", IntegerType))))
+      .select(seeded("gw"), seeded("gc")).collect()
+    val x = init.map(_.getDouble(0)) ++ init.map(_.getDouble(1)) ++ new Array[Double](2 * nv)
+    val a = new Array[Double](x.length)
+    val blocks = pairsWithConstants(
+        coocWithVocab(docs, broadcast(voc.frame(spark)), window, contentCol, maxGram))
+      .select(col("ia").cast("int"), col("ib").cast("int"), col("f"), col("logx"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ia, ib = Array.newBuilder[Int]
+        val f, logx = Array.newBuilder[Double]
+        rows.foreach { r =>
+          ia += r.getInt(0); ib += r.getInt(1); f += r.getDouble(2); logx += r.getDouble(3)
+        }
+        Iterator.single(PairBlock(ia.result(), ib.result(), f.result(), logx.result()))
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sc = spark.sparkContext
+    val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val width = x.length + 1
+    try (1 to steps).foreach { _ =>
+      val model = sc.broadcast(x)
+      // the zero is empty and a task allocates its sums on its first
+      // block: treeAggregate serializes its zero into the step's task
+      // binary, which a model-sized zero would bloat
+      val sums = try blocks.treeAggregate(Array.emptyLongArray)(
+          (acc, p) => stepInto(if (acc.isEmpty) new Array[Long](width) else acc,
+            p, model.value, nv, dim, termScale), addInto)
+        finally model.destroy()
+      val g = if (sums.isEmpty) new Array[Long](width) else sums
+      losses += toDouble(g(x.length), 8)
+      // AdaGrad: a' = a + g²; v' = v − lr·g/sqrt(a' + 1e-8), the SQL
+      // form's operation order. A cell no pair touched has g = 0 and
+      // keeps its value.
+      var i = 0
+      while (i < x.length) {
+        val gi = toDouble(g(i), if (i < 2 * cells) 8 else 6)
+        x(i) = x(i) - lr * gi / math.sqrt(a(i) + gi * gi + 1e-8)
+        a(i) = a(i) + gi * gi
+        i += 1
+      }
+    } finally blocks.unpersist(blocking = false)
+    Model(voc, dim, x, a, losses.toSeq)
   }
 
   /** The per-step full-batch losses as a graded frame (step, loss) —
@@ -676,9 +777,7 @@ final case class GloveTextEncoder(vectors: Map[String, Array[Double]],
         n += 1
         var j = 0
         while (j < dim) {
-          // mirror Glove.rnd: the tie-break epsilon rides every round
-          sums(j) = sums(j).add(java.math.BigDecimal.valueOf(v(j) + Glove.TieEps)
-            .setScale(6, java.math.RoundingMode.HALF_UP))
+          sums(j) = sums(j).add(Glove.rounded(v(j), 6))
           j += 1
         }
       }

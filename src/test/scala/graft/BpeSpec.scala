@@ -186,6 +186,19 @@ class BpeSpec extends SparkSpec {
       s"batching must beat one-round-per-merge at scale; took $rounds")
   }
 
+  test("a training runs at most rounds + 3 Spark jobs") {
+    // an in-memory copy of the corpus: no file listing, so the memo
+    // never serves it and every call trains
+    val docs = Tables.documents(spark, sf).select(col("text"))
+    val local = spark.createDataFrame(java.util.Arrays.asList(docs.collect(): _*), docs.schema)
+    var rounds = 0
+    val jobs = SparkJobs.countIn(spark) {
+      rounds = Bpe.bpeTrainWithRounds(local, nMerges = 64, maxGram = Bpe.ScaledMaxGram)._2
+    }
+    info(s"64 merges: $rounds rounds, $jobs jobs")
+    assert(rounds > 0 && jobs <= rounds + 3, s"$jobs jobs for $rounds rounds")
+  }
+
   test("SCALED serving: roundtrip under the 256-merge table; size-routed join is value-invisible") {
     val docs = Tables.documents(spark, sf)
     val merges = Bpe.bpeTrainScaled(docs)

@@ -3,8 +3,6 @@ package graft
 import graft.functions.VectorFunctions._
 import graft.plans.TopKAgg
 import graft.sources.GraphAnnIndex
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -124,31 +122,9 @@ class GraphAnnWalkSpec extends SparkSpec {
     assert(GraphAnnIndex.searchSelf(spark, d).collect().map(_.toString).toSeq == fresh)
   }
 
-  /** Jobs submitted under this spec's job group while `body` runs. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"gwalk-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "graph walk job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
-  }
-
   test("a driver-regime searchSelf, collected, runs at most steps + 8 Spark jobs") {
     val steps = 8
-    val jobs = jobsOf(GraphAnnIndex.searchSelf(spark, dir, steps = steps).collect())
+    val jobs = SparkJobs.countIn(spark)(GraphAnnIndex.searchSelf(spark, dir, steps = steps).collect())
     assert(jobs > 0 && jobs <= steps + 8, s"$jobs jobs for a $steps-step search")
   }
 
