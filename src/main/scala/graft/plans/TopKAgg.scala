@@ -102,13 +102,13 @@ object TopKAgg {
   }
 
   /** Cut `buf` to its top-k rows under [[orderKey]]. With `dedupIds`
-    * the cut keeps the k best DISTINCT ids (per-id best score first —
-    * sorted order puts it first, distinctBy keeps first), which is
-    * exactly `dropDuplicates(id)` + top-k whenever every duplicate
-    * of an id carries the same score (the deterministic-scorer
-    * contract of the beam walk). Discarding below the k-th distinct
-    * id is safe: a reappearing duplicate scores the same and would
-    * be discarded again. */
+    * the cut keeps the k best DISTINCT ids, each at its best score
+    * over all its duplicates (sorted order puts that row first,
+    * distinctBy keeps first). The cut is mergeable — cutting the
+    * union of partial cuts equals cutting the whole input — so
+    * discarding below the k-th distinct id is safe: an id's best row
+    * survives the partial cut that holds it whenever the id belongs
+    * in the final k. */
   private[graft] def cut(buf: ArrayBuffer[(Double, Long)], k: Int,
                          dedupIds: Boolean): ArrayBuffer[(Double, Long)] = {
     val sorted = buf.sortBy(orderKey)
@@ -120,9 +120,8 @@ object TopKAgg {
     GraftBridge.column(TopKAgg(GraftBridge.expression(score),
       GraftBridge.expression(id), k).toAggregateExpression())
 
-  /** `top_k` over DISTINCT ids — `dropDuplicates(group, id)` + topK
-    * fused into one exchange, exact whenever duplicates of an id
-    * score identically (deterministic scorers). */
+  /** `top_k` over DISTINCT ids in one exchange: the k best ids per
+    * group, each at its best score over its duplicates (see [[cut]]). */
   def topKDistinct(score: Column, id: Column, k: Int): Column =
     GraftBridge.column(TopKAgg(GraftBridge.expression(score),
       GraftBridge.expression(id), k, dedupIds = true).toAggregateExpression())

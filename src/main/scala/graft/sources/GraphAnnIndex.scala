@@ -74,25 +74,25 @@ import scala.collection.mutable.{ArrayBuffer, LongMap}
   * happens exactly once, at build. When the frontier fits the driver
   * (nq·max(beam, entries) ≤ `maxDriverFrontier` rows), round 0
   * scores entries × queries on the driver and each of steps 1 to
-  * steps-1 is ONE Spark job (no SQL planning) over a per-search
+  * `steps` is ONE Spark job (no SQL planning) over a per-search
   * cached adjacency: src → its live, delete-masked out-edges with
   * `dv`/`dnrm` inline. Building that cache scans the WHOLE live edge
   * table once per search (O(edges) bytes, the price of planning-free
   * steps); each step then looks up only its frontier's lists,
-  * O(beam·degree) candidates per query. The last step stays a lazy
-  * plan that reads only the `pb` partitions the frontier hashes into
-  * and row-group-prunes on `src` (static isin pruning), so the
-  * returned frame's lineage is index bytes only. When a caller serves
-  * a query batch too large to hold the frontier driver-side, the loop
-  * degrades to the distributed shape: the live edge table pinned
-  * with persist (again a whole-table read), a localCheckpointed
-  * frontier, a pb-pruned probe per step (the frontier's distinct pb
-  * set is ≤ pBuckets rows — one cheap aggregate per round), and a
-  * SIZE-ROUTED join — the frontier broadcasts only below
-  * `maxBroadcastFrontier` rows; above it the join shuffles on src
-  * (sort-merge), so no step ever materializes the frontier on the
-  * driver. Branch choice is an execution-strategy swap, never a
-  * result change (spec-pinned).
+  * O(beam·degree) candidates per query. Tasks cut per-query top lists
+  * and the driver merges them; the last step cuts at k, so the ranked
+  * answer returns as a local relation and nothing runs after the last
+  * step job. When a caller serves a query batch too large to hold the
+  * frontier driver-side, the loop degrades to the distributed shape:
+  * the live edge table pinned with persist (again a whole-table
+  * read), a localCheckpointed frontier, a pb-pruned probe per step
+  * (the frontier's distinct pb set is ≤ pBuckets rows — one cheap
+  * aggregate per round), a SIZE-ROUTED join — the frontier broadcasts
+  * only below `maxBroadcastFrontier` rows; above it the join shuffles
+  * on src (sort-merge), so no step ever materializes the frontier on
+  * the driver — and a lazy top-k exchange ranks the last step. Branch
+  * choice is an execution-strategy swap, never a result change
+  * (spec-pinned).
   */
 object GraphAnnIndex {
 
@@ -159,9 +159,9 @@ object GraphAnnIndex {
     loadBuckets(spark, dir, vecType).where(col("tbl") === 0)
       .select(col("id"), col("v"), col("nrm"))
 
-  /** The deterministic PQ codebook shared with the fused
-    * [[Similarity.graphPqTopK]]: the `nCodes` lowest-id vectors'
-    * subvectors — (code, sub, cv). Model-sized; broadcast at use. */
+  /** The deterministic PQ codebook shared with the SQL reference PQ
+    * walk (`GraphWalkReference.graphPqTopK`, test sources): the
+    * `nCodes` lowest-id vectors' subvectors — (code, sub, cv). Model-sized; broadcast at use. */
   private def pqCodebook(nodes: DataFrame, pqM: Int, subDim: Int,
                          nCodes: Int): DataFrame =
     Similarity.subVectors(nodes.select(col("id"), col("v")), pqM, subDim, "cv")
@@ -433,12 +433,15 @@ object GraphAnnIndex {
 
   /** Beam search over the persisted graph. `queries` is (query_id,
     * qv) — external vectors; the corpus is never read. Bit-identical
-    * to [[Similarity.graphTopK]] on the same corpus and parameters:
+    * to the SQL reference walk (`GraphWalkReference.graphTopK`, test
+    * sources) on the same corpus and parameters:
     * same candidate sets, same 6-dp rounding, same (sim DESC, node)
     * ties. One sizing-and-fetch `limit` collect of the queries picks
     * the regime: batches with `nq·max(beam, entries)` within
     * `maxDriverFrontier` walk on the driver ([[walkOnDriver]]), larger
-    * ones walk the distributed frontier ([[walkDistributed]]). */
+    * ones walk the distributed frontier ([[walkDistributed]]). Either
+    * way the result is (query_id, neighbor_id, rank, sim) ordered by
+    * (query_id, rank); rows that share a query_id rank as one query. */
   def search(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int = 10, beam: Int = 32, steps: Int = 8, entries: Int = 16,
              maxDriverFrontier: Int = 100000,
@@ -472,25 +475,30 @@ object GraphAnnIndex {
       if (maxDriverFrontier < 0) -1
       else math.min(maxDriverFrontier / math.max(1, math.max(beam, entries)), Int.MaxValue - 1)
     val qRows = q.limit(qCap + 1).collect()
-    val walked =
-      if (qRows.length <= qCap)
-        walkOnDriver(spark, meta, edges, ent, qRows, q.schema("qv").dataType,
-          beam, steps, candidateFilter, delMask)
-      else
+    if (qRows.length <= qCap)
+      walkOnDriver(spark, meta, edges, ent, qRows, q.schema("qv").dataType,
+        k, beam, steps, candidateFilter, delMask)
+    else
+      // the final candidate union still carries duplicate (query, node)
+      // rows; a repeated query_id gives them different sims. The
+      // DISTINCT-id rank keeps each node's best sim over all the id's
+      // vectors, and its partial cuts merge exactly
+      Similarity.rankTopK(
         walkDistributed(meta, edges, ent, q, beam, steps, entries,
           maxBroadcastFrontier, candidateFilter, delMask)
-    // the final candidate union still carries duplicate (query, node)
-    // rows (identical sims) — the DISTINCT-id rank dedups them inside
-    // the one top-k exchange
-    Similarity.rankTopK(
-      walked.where(col("node") =!= col("query_id"))
-        .select(col("query_id"), col("node").as("neighbor_id"), col("sim")), k,
-      dedup = true)
+          .where(col("node") =!= col("query_id"))
+          .select(col("query_id"), col("node").as("neighbor_id"), col("sim")), k,
+        dedup = true)
   }
 
   /** The (query_id, node, sim) rows a beam step scores and cuts. */
   private val ScoreSchema = StructType(Seq(StructField("query_id", LongType),
     StructField("node", LongType), StructField("sim", DoubleType)))
+
+  /** A search's result: [[Similarity.rankTopK]]'s output schema. */
+  private val RankedSchema = StructType(Seq(StructField("query_id", LongType),
+    StructField("neighbor_id", LongType), StructField("rank", LongType, nullable = false),
+    StructField("sim", DoubleType)))
 
   /** A candidate's score in SQL, over (qv, qnrm) and (dv, dnrm). */
   private val SimCol =
@@ -522,9 +530,12 @@ object GraphAnnIndex {
   /** One out-edge in the search-time adjacency cache. */
   private final case class Edge(dst: Long, dv: ArrayData, dnrm: Double)
 
-  /** The query batch as the step tasks read it. */
-  private final case class QueryBatch(ids: Array[Long], vecs: Array[ArrayData],
-                                      isFloat: Boolean, nrms: Array[Double])
+  /** The query batch as the step tasks read it: one entry per distinct
+    * query_id, holding every vector the batch gave that id. A repeated
+    * id walks as ONE query whose candidates score against each of its
+    * vectors, as the distributed regime's join on query_id scores them. */
+  private final case class QueryBatch(ids: Array[Long], vecs: Array[Array[ArrayData]],
+                                      isFloat: Boolean, nrms: Array[Array[Double]])
 
   /** `candidateFilter` resolved once against (query_id, node, sim) and
     * bound to those ordinals, for evaluation outside a SQL plan. */
@@ -551,10 +562,13 @@ object GraphAnnIndex {
     }
 
   /** One beam step over this task's adjacency partitions: expand each
-    * query's frontier, score the out-edges, filter, and cut to the
-    * query's top-`beam` distinct nodes (the [[TopKAgg]] order). */
+    * query's frontier, score the out-edges against the query's
+    * vectors, filter, and cut to the query's top-`cut` distinct nodes
+    * (the [[TopKAgg]] order). With `dropSelf` (the last step) a query's
+    * own id is never a candidate. */
   private def stepTask(parts: Iterator[LongMap[Array[Edge]]], qs: QueryBatch,
-                       frontier: Array[Array[Long]], dFloat: Boolean, beam: Int,
+                       frontier: Array[Array[Long]], dFloat: Boolean, cut: Int,
+                       dropSelf: Boolean,
                        filter: Option[Expression]): Array[Array[(Double, Long)]] = {
     val pred = predicate(filter)
     val row = new SpecificInternalRow(ScoreSchema.map(_.dataType))
@@ -562,117 +576,117 @@ object GraphAnnIndex {
     parts.foreach { adj =>
       var i = 0
       while (i < qs.ids.length) {
-        if (qs.vecs(i) != null) frontier(i).foreach { u =>
+        val qid = qs.ids(i)
+        frontier(i).foreach { u =>
           adj.get(u).foreach(_.foreach { e =>
-            val s = walkSim(qs.vecs(i), qs.isFloat, qs.nrms(i), e.dv, dFloat, e.dnrm)
-            if (s != null && passes(pred, row, qs.ids(i), e.dst, s)) out(i) += ((s, e.dst))
+            if (!(dropSelf && e.dst == qid)) qs.vecs(i).indices.foreach { j =>
+              val v = qs.vecs(i)(j)
+              val s = if (v == null) null
+                      else walkSim(v, qs.isFloat, qs.nrms(i)(j), e.dv, dFloat, e.dnrm)
+              if (s != null && passes(pred, row, qid, e.dst, s)) out(i) += ((s, e.dst))
+            }
           })
         }
         i += 1
       }
     }
-    out.map(TopKAgg.cut(_, beam, dedupIds = true).toArray)
+    out.map(TopKAgg.cut(_, cut, dedupIds = true).toArray)
   }
 
   /** The driver regime: the query batch and each step's frontier
     * (≤ nq·max(beam, entries) rows) live on the driver. Round 0 scores
-    * entries × queries on the driver; steps 1 to steps-1 are ONE
-    * `runJob` each over a per-search cached adjacency RDD (src → its
-    * live, delete-masked out-edges with `dv`/`dnrm` inline, built from
-    * the first step's scan of the live edge table), with the queries
-    * and the frontier shipped by broadcast; each task cuts a per-query
-    * top-`beam` and the driver merges those lists with the frontier
-    * rows. The last step stays a lazy plan — a pb/src-pruned edge scan
-    * joined to the frontier and query relations — so the result keeps
-    * an index-only lineage. Returns the last step's (query_id, node,
-    * sim) candidate union. */
+    * entries × queries on the driver; each of steps 1 to `steps` is ONE
+    * `runJob` over a per-search cached adjacency RDD (src → its live,
+    * delete-masked out-edges with `dv`/`dnrm` inline, built from the
+    * first step's scan of the live edge table), with the queries and
+    * the frontier shipped by broadcast. Each task cuts a per-query top
+    * list and the driver merges those lists with the frontier rows:
+    * rank inside partitions, merge the bounded lists once. Steps 1 to
+    * steps-1 cut at `beam`; the last step drops each query's own id and
+    * cuts at `k`, so the ranked answer is born on the driver and comes
+    * back as a local relation — nothing reads index bytes after the
+    * last step job. With `steps` < 1 the answer is round 0's entries. */
   private def walkOnDriver(spark: SparkSession, meta: Meta, edges: DataFrame,
                            ent: DataFrame, qRows: Array[Row], qvType: DataType,
-                           beam: Int, steps: Int, candidateFilter: Option[Column],
+                           k: Int, beam: Int, steps: Int, candidateFilter: Option[Column],
                            delMask: Option[Either[Array[Long], DataFrame]]): DataFrame = {
     val sc = spark.sparkContext
-    val nq = qRows.length
-    val qIds = qRows.map(_.getLong(0))
+    // sorted by id: the order the ranked rows come back in
+    val byId = qRows.groupBy(_.getLong(0)).toArray.sortBy(_._1)
+    val nq = byId.length
+    val qIds = byId.map(_._1)
     val toQ = CatalystTypeConverters.createToCatalystConverter(qvType)
-    val qVecs = qRows.map(r => toQ(r.get(1)).asInstanceOf[ArrayData])
+    val qVecs = byId.map(_._2.map(r => toQ(r.get(1)).asInstanceOf[ArrayData]))
     val qFloat = isFloatVec(qvType)
-    val qNrms = qVecs.map(v =>
-      if (v == null) Double.NaN else math.sqrt(NativeExprs.dotProductEval(v, v, qFloat, qFloat)))
+    val qNrms = qVecs.map(_.map(v =>
+      if (v == null) Double.NaN else math.sqrt(NativeExprs.dotProductEval(v, v, qFloat, qFloat))))
     val vType = DataType.fromDDL(meta.vecType)
     val dFloat = isFloatVec(vType)
     val toD = CatalystTypeConverters.createToCatalystConverter(vType)
-    // round 0: every (query, entry) pair, NULL sims kept — an entry
-    // with an undefined cosine is still expanded at step 1
+    // round 0: every (query vector, entry) pair, NULL sims kept — an
+    // entry with an undefined cosine is still expanded at step 1
     val entRows = ent.select(col("id"), col("v"), col("nrm")).collect()
     var frontier: Array[Array[(Long, java.lang.Double)]] = Array.tabulate(nq) { i =>
-      entRows.map { r =>
+      for (r <- entRows; j <- qVecs(i).indices) yield {
         val v = toD(r.get(1)).asInstanceOf[ArrayData]
-        r.getLong(0) -> (if (qVecs(i) == null || v == null || r.isNullAt(2)) null
-                         else walkSim(qVecs(i), qFloat, qNrms(i), v, dFloat, r.getDouble(2)))
+        r.getLong(0) -> (if (qVecs(i)(j) == null || v == null || r.isNullAt(2)) null
+                         else walkSim(qVecs(i)(j), qFloat, qNrms(i)(j), v, dFloat, r.getDouble(2)))
       }
     }
-    val filter = candidateFilter.map(boundFilter(spark, _))
-    if (steps > 1) {
-      val pred = predicate(filter)
-      val row = new SpecificInternalRow(ScoreSchema.map(_.dataType))
-      val cached = maskDeleted(edges.select(col("src"), col("dst"), col("dv"), col("dnrm")),
-          "dst", delMask)
-        .queryExecution.toRdd.mapPartitions { rows =>
-          val bySrc = LongMap.empty[ArrayBuffer[Edge]]
-          rows.foreach { r =>
-            // a NULL vector or norm scores NULL, which every cut drops
-            if (!r.isNullAt(2) && !r.isNullAt(3))
-              bySrc.getOrElseUpdate(r.getLong(0), ArrayBuffer.empty) +=
-                Edge(r.getLong(1), r.getArray(2).copy(), r.getDouble(3))
-          }
-          Iterator.single(bySrc.mapValuesNow(_.toArray))
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val qB = sc.broadcast(QueryBatch(qIds, qVecs, qFloat, qNrms))
-      try (1 until steps).foreach { _ =>
-        val fB = sc.broadcast(frontier.map(_.map(_._1)))
-        val parts = sc.runJob(cached, (it: Iterator[LongMap[Array[Edge]]]) =>
-          stepTask(it, qB.value, fB.value, dFloat, beam, filter))
-        fB.destroy()
-        // the candidate union also holds the frontier rows themselves,
-        // filtered like every candidate (round-0 entries included)
-        frontier = Array.tabulate(nq) { i =>
-          val buf = ArrayBuffer.empty[(Double, Long)]
-          frontier(i).foreach { case (n, s) =>
-            if (s != null && passes(pred, row, qIds(i), n, s)) buf += ((s.doubleValue, n))
-          }
-          parts.foreach(buf ++= _(i))
-          TopKAgg.cut(buf, beam, dedupIds = true).map { case (s, n) => n -> Double.box(s) }.toArray
-        }
-      } finally {
-        cached.unpersist(blocking = false)
-        qB.destroy()
+    val row = new SpecificInternalRow(ScoreSchema.map(_.dataType))
+    // query i's frontier rows, filtered like every candidate (round-0
+    // entries included), merged with the step tasks' lists and cut
+    def merge(i: Int, lists: Seq[Array[(Double, Long)]], cut: Int, dropSelf: Boolean,
+              pred: Option[BasePredicate]): ArrayBuffer[(Double, Long)] = {
+      val buf = ArrayBuffer.empty[(Double, Long)]
+      frontier(i).foreach { case (n, s) =>
+        if (s != null && !(dropSelf && n == qIds(i)) && passes(pred, row, qIds(i), n, s))
+          buf += ((s.doubleValue, n))
       }
+      lists.foreach(buf ++= _)
+      TopKAgg.cut(buf, cut, dedupIds = true)
     }
-    val frontRel = spark.createDataFrame(java.util.Arrays.asList(
-      (for (i <- 0 until nq; (n, s) <- frontier(i)) yield Row(qIds(i), n, s)): _*), ScoreSchema)
-    if (steps < 1) return frontRel
-    // the last step: the frontier is model-sized and ON the driver, so
-    // the edge scan prunes STATICALLY — partition isin on pb, row-group
-    // isin on src
-    val nodes = frontier.flatMap(_.map(_._1)).distinct
-    val pbs = nodes.map(n => Math.floorMod(n, meta.pBuckets.toLong)).distinct
-    val qRel = spark.createDataFrame(java.util.Arrays.asList(
-      qIds.indices.map(i =>
-        Row(qIds(i), qRows(i).get(1), if (qVecs(i) == null) null else qNrms(i))): _*),
-      StructType(Seq(StructField("query_id", LongType), StructField("qv", qvType),
-        StructField("qnrm", DoubleType))))
-    val expanded = edges.where(col("pb").isin(pbs: _*) && col("src").isin(nodes: _*))
-      .join(broadcast(frontRel.select(col("query_id"), col("node"))),
-        col("src") === col("node"))
-      .join(broadcast(qRel), Seq("query_id"))
-      .select(col("query_id"), col("dst").as("node"), SimCol)
-    // the metadata filter (the vector store's `where=` on the serving
-    // path): the walk NAVIGATES through allowed nodes only — applied
-    // to the whole candidate union each round, entry points included
-    // from round 1 on
-    val unioned = frontRel.unionByName(expanded)
-    maskDeleted(candidateFilter.fold(unioned)(unioned.where), "node", delMask)
+    val ranked =
+      // with no step, the candidates are round 0's rows, unfiltered
+      if (steps < 1) Array.tabulate(nq)(merge(_, Nil, k, dropSelf = true, None))
+      else {
+        val filter = candidateFilter.map(boundFilter(spark, _))
+        val pred = predicate(filter)
+        val cached = maskDeleted(edges.select(col("src"), col("dst"), col("dv"), col("dnrm")),
+            "dst", delMask)
+          .queryExecution.toRdd.mapPartitions { rows =>
+            val bySrc = LongMap.empty[ArrayBuffer[Edge]]
+            rows.foreach { r =>
+              // a NULL vector or norm scores NULL, which every cut drops
+              if (!r.isNullAt(2) && !r.isNullAt(3))
+                bySrc.getOrElseUpdate(r.getLong(0), ArrayBuffer.empty) +=
+                  Edge(r.getLong(1), r.getArray(2).copy(), r.getDouble(3))
+            }
+            Iterator.single(bySrc.mapValuesNow(_.toArray))
+          }
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val qB = sc.broadcast(QueryBatch(qIds, qVecs, qFloat, qNrms))
+        def step(cut: Int, last: Boolean): Array[ArrayBuffer[(Double, Long)]] = {
+          val fB = sc.broadcast(frontier.map(_.map(_._1).distinct))
+          val parts = try sc.runJob(cached, (it: Iterator[LongMap[Array[Edge]]]) =>
+            stepTask(it, qB.value, fB.value, dFloat, cut, last, filter))
+          finally fB.destroy()
+          Array.tabulate(nq)(i => merge(i, parts.map(_(i)), cut, last, pred))
+        }
+        try {
+          (1 until steps).foreach { _ =>
+            frontier = step(beam, last = false)
+              .map(_.map { case (s, n) => n -> Double.box(s) }.toArray)
+          }
+          step(k, last = true)
+        } finally {
+          cached.unpersist(blocking = false)
+          qB.destroy()
+        }
+      }
+    spark.createDataFrame(java.util.Arrays.asList(
+      (for (i <- 0 until nq; ((s, n), r) <- ranked(i).zipWithIndex)
+        yield Row(qIds(i), n, r + 1L, s)): _*), RankedSchema)
   }
 
   /** The distributed regime: the frontier stays a localCheckpointed
@@ -761,15 +775,16 @@ object GraphAnnIndex {
   }
 
   /** PQ-compressed serving over the SAME persisted layout (the
-    * DiskANN memory model — see [[Similarity.graphPqTopK]] for the
-    * algorithm): the beam walk reads ONLY (src, dst, dcodes, pb)
+    * DiskANN memory model — the SQL reference PQ walk,
+    * `GraphWalkReference.graphPqTopK` in the test sources, spells out
+    * the algorithm): the beam walk reads ONLY (src, dst, dcodes, pb)
     * from the edge table — COLUMN PRUNING is the footprint win, the
     * pqM-codes payload instead of `dim` doubles both on disk and in
     * the pinned working set — scores by asymmetric distance against
     * the broadcast per-query LUT, and reranks the final candidate
     * set at full precision from the id-bucketed `nodes/` table (one
-    * partition-pruned fetch). Bit-identical to the fused
-    * [[Similarity.graphPqTopK]] on the same corpus and parameters. */
+    * partition-pruned fetch). Bit-identical to that reference walk on
+    * the same corpus and parameters. */
   def searchPq(spark: SparkSession, dir: String, queries: DataFrame,
                k: Int = 10, beam: Int = 32, steps: Int = 8, entries: Int = 16,
                maxDriverFrontier: Int = 100000,

@@ -44,7 +44,7 @@ class GraphAnnSpec extends SparkSpec {
     val dir = tmpDir("roundtrip")
     graft.sources.GraphAnnIndex.buildAndSave(emb, dir)
     val served = graft.sources.GraphAnnIndex.searchSelf(spark, dir, nQueries = 5, k = 10)
-    val fused = Similarity.graphTopK(emb, nQueries = 5, k = 10)
+    val fused = GraphWalkReference.graphTopK(emb, nQueries = 5, k = 10)
     assert(served.collect().map(_.toString).toSeq ==
       fused.collect().map(_.toString).toSeq)
   }
@@ -106,17 +106,24 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("a served search never touches the corpus — every input file is index bytes") {
+    // build from a private copy of the corpus, then delete the copy:
+    // both regimes must serve with no corpus on disk
+    val corpus = tmpDir("nocorpus_emb")
+    emb.write.mode("overwrite").parquet(corpus)
     val dir = tmpDir("nocorpus")
-    graft.sources.GraphAnnIndex.ensureBuilt(emb, dir)
-    val served = graft.sources.GraphAnnIndex.searchSelf(spark, dir)
-    // lineage pin: the search plan's scans read ONLY the persisted
-    // layout — zero embeddings.parquet inputs. (The per-step scans
-    // behind the driver-side frontier are edge probes by
-    // construction: src/pb isin over dir/edges.)
-    val inputs = served.inputFiles
-    assert(inputs.nonEmpty && inputs.forall(_.contains(new java.io.File(dir).getName)),
-      s"expected only index inputs, got ${inputs.mkString(", ")}")
-    assert(served.count() > 0)
+    graft.sources.GraphAnnIndex.buildAndSave(spark.read.parquet(corpus), dir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(corpus))
+    // lineage pin: the result's scans read ONLY the persisted layout.
+    // The driver regime's result is a local relation (no scans at
+    // all); the distributed regime's lazy plan scans index files only
+    for (mdf <- Seq(100000, 0)) {
+      val served = graft.sources.GraphAnnIndex.searchSelf(spark, dir, maxDriverFrontier = mdf)
+      val inputs = served.inputFiles
+      assert((mdf == 0) == inputs.nonEmpty &&
+        inputs.forall(_.contains(new java.io.File(dir).getName)),
+        s"maxDriverFrontier=$mdf: expected only index inputs, got ${inputs.mkString(", ")}")
+      assert(served.count() > 0)
+    }
   }
 
   test("stats reads the persisted degree histogram; ensureBuilt is idempotent") {
@@ -152,7 +159,7 @@ class GraphAnnSpec extends SparkSpec {
     assert(live == rebuilt)
     // 2. served results equal the rebuild's fused search
     val served = graft.sources.GraphAnnIndex.searchSelf(spark, dir)
-    val fused = Similarity.graphTopK(emb, nbits = bits)
+    val fused = GraphWalkReference.graphTopK(emb, nbits = bits)
     assert(served.collect().map(_.toString).toSeq ==
       fused.collect().map(_.toString).toSeq)
   }
@@ -231,9 +238,9 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("PQ-guided walk is deterministic, partition-invariant, and rerank-exact on top") {
-    val a = Similarity.graphPqTopK(emb.repartition(5), nQueries = 3, k = 5)
+    val a = GraphWalkReference.graphPqTopK(emb.repartition(5), nQueries = 3, k = 5)
       .collect().map(_.toString).toSeq
-    val b = Similarity.graphPqTopK(emb.coalesce(1), nQueries = 3, k = 5)
+    val b = GraphWalkReference.graphPqTopK(emb.coalesce(1), nQueries = 3, k = 5)
       .collect().map(_.toString).toSeq
     assert(a == b && a.nonEmpty)
     // the returned sims are FULL-PRECISION cosines (the rerank), not
@@ -242,7 +249,7 @@ class GraphAnnSpec extends SparkSpec {
     val exact = Similarity.bruteTopK(emb, nQueries = 3, k = 200)
       .select(col("query_id"), col("neighbor_id"), col("sim"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    Similarity.graphPqTopK(emb, nQueries = 3, k = 5).collect().foreach { r =>
+    GraphWalkReference.graphPqTopK(emb, nQueries = 3, k = 5).collect().foreach { r =>
       val key = (r.getLong(0), r.getLong(1))
       exact.get(key).foreach(s => assert(s == r.getDouble(3),
         s"rerank sim for $key must be the exact cosine"))
@@ -253,7 +260,7 @@ class GraphAnnSpec extends SparkSpec {
     val dir = tmpDir("pqserve")
     graft.sources.GraphAnnIndex.ensureBuilt(emb, dir)
     val served = graft.sources.GraphAnnIndex.searchPqSelf(spark, dir, nQueries = 5, k = 10)
-    val fused = Similarity.graphPqTopK(emb, nQueries = 5, k = 10)
+    val fused = GraphWalkReference.graphPqTopK(emb, nQueries = 5, k = 10)
     assert(served.collect().map(_.toString).toSeq ==
       fused.collect().map(_.toString).toSeq)
     // lineage: index bytes only, never the corpus
@@ -274,20 +281,20 @@ class GraphAnnSpec extends SparkSpec {
     // in the base), so the grown compressed index must serve exactly
     // what a fused PQ walk over the whole corpus returns
     val served = graft.sources.GraphAnnIndex.searchPqSelf(spark, dir)
-    val fused = Similarity.graphPqTopK(emb, nbits = bits)
+    val fused = GraphWalkReference.graphPqTopK(emb, nbits = bits)
     assert(served.collect().map(_.toString).toSeq ==
       fused.collect().map(_.toString).toSeq)
   }
 
   test("search is deterministic across partitionings and better than entry-seeding alone") {
-    val a = Similarity.graphTopK(emb.repartition(5), nQueries = 3, k = 5)
+    val a = GraphWalkReference.graphTopK(emb.repartition(5), nQueries = 3, k = 5)
       .collect().map(_.toString).toSeq
-    val b = Similarity.graphTopK(emb.coalesce(1), nQueries = 3, k = 5)
+    val b = GraphWalkReference.graphTopK(emb.coalesce(1), nQueries = 3, k = 5)
       .collect().map(_.toString).toSeq
     assert(a == b && a.nonEmpty)
     // the walk must traverse: its results beat scoring only the
     // entry points (steps=0 equivalent would return entry ids)
-    val res = Similarity.graphTopK(emb, nQueries = 3, k = 5)
+    val res = GraphWalkReference.graphTopK(emb, nQueries = 3, k = 5)
     assert(res.where(col("neighbor_id") >= 16).count() > 0,
       "beam search must reach nodes beyond the entry set")
   }
@@ -363,7 +370,7 @@ class GraphAnnSpec extends SparkSpec {
     assert(graft.sources.GraphAnnIndex.appendIncremental(inc, dir))
     val committed = graft.sources.GraphAnnIndex.searchSelf(spark, dir)
       .collect().map(_.toString).toSeq
-    val fused = Similarity.graphTopK(emb, nbits = bits)
+    val fused = GraphWalkReference.graphTopK(emb, nbits = bits)
       .collect().map(_.toString).toSeq
     assert(committed == fused)
   }
@@ -376,7 +383,7 @@ class GraphAnnSpec extends SparkSpec {
     // the increment applied → mask debt exists
     assert(new java.io.File(s"$dir/retired").exists)
     // grown index serves the full corpus exactly as a rebuild would
-    val fused = Similarity.graphTopK(emb, nbits = Similarity.autoBits(emb.count()))
+    val fused = GraphWalkReference.graphTopK(emb, nbits = Similarity.autoBits(emb.count()))
       .collect().map(_.toString).toSeq
     assert(first == fused)
     assert(graft.sources.GraphAnnIndex.compactTombstones(spark, dir))

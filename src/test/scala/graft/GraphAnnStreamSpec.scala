@@ -69,7 +69,7 @@ class GraphAnnStreamSpec extends SparkSpec {
 
     // grown-index serving == full rebuild at the frozen hash
     val served = GraphAnnIndex.searchSelf(spark, dir)
-    val fused = Similarity.graphTopK(emb, nbits = bits)
+    val fused = GraphWalkReference.graphTopK(emb, nbits = bits)
     assert(served.collect().map(_.toString).toSeq ==
       fused.collect().map(_.toString).toSeq)
   }

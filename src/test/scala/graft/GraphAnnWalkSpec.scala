@@ -3,7 +3,9 @@ package graft
 import graft.functions.VectorFunctions._
 import graft.plans.TopKAgg
 import graft.sources.GraphAnnIndex
-import org.apache.spark.sql.Row
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -96,16 +98,40 @@ class GraphAnnWalkSpec extends SparkSpec {
   }
 
   test("the driver walk matches the distributed walk at every step count and under a sim filter") {
-    def q = spark.read.parquet(s"$dir/entries")
+    def entryQ(d: String) = spark.read.parquet(s"$d/entries")
       .select(col("id").cast("long").as("query_id"), col("v").as("qv"))
-      .where(col("query_id") < 4)
+    val q = entryQ(dir).where(col("query_id") < 4)
+    // query_id 1 twice with different vectors (entry 5's rides as a
+    // second vector of query 1), query_id 2 twice with its own vector:
+    // rows that share an id rank as one query in both regimes
+    val repeated = q.unionByName(entryQ(dir).where(col("query_id") === 5)
+      .select(lit(1L).as("query_id"), col("qv")))
+      .unionByName(q.where(col("query_id") === 2))
+    // an index with deleted vectors, entry points among them
+    val deleted = tmpDir("walkdel")
+    FileUtils.copyDirectory(new java.io.File(dir), new java.io.File(deleted))
+    GraphAnnIndex.deleteVectors(spark, deleted,
+      emb.where(pmod(col("vec_id"), lit(7)) === 6).select(col("vec_id").as("id")), "mod7")
     val filt = Some(col("sim") > 0.05 && pmod(col("node") + col("query_id"), lit(3)) =!= 0)
-    for (steps <- Seq(0, 1, 2, 8); f <- Seq(None, filt)) {
-      def run(mdf: Int) = GraphAnnIndex.search(spark, dir, q, k = 7, steps = steps,
-        maxDriverFrontier = mdf, candidateFilter = f).collect().map(_.toString).toSeq
-      val drv = run(100000)
-      assert(drv.nonEmpty, s"steps=$steps filter=${f.isDefined}: empty result")
-      assert(drv == run(0), s"steps=$steps filter=${f.isDefined}: regimes disagree")
+    val cases: Seq[(String, String, DataFrame, Int, Int, Int, Option[Column])] =
+      (for (steps <- Seq(0, 1, 2, 8); f <- Seq(None, filt))
+        yield (s"steps=$steps filter=${f.isDefined}", dir, q, 7, 32, steps, f)) ++
+      Seq(1, 2, 8).map(steps => (s"beam 4 < k 10, steps=$steps", dir, q, 10, 4, steps, None)) ++
+      Seq(0, 2, 8).flatMap(steps => Seq(
+        (s"repeated query_id, steps=$steps", dir, repeated, 7, 32, steps, None),
+        (s"deleted vectors, steps=$steps", deleted, q, 7, 32, steps, None))) :+
+      (("deleted vectors under a sim filter", deleted, q, 7, 32, 8, filt))
+    for ((name, d, qs, k, beam, steps, f) <- cases) {
+      def run(mdf: Int) = {
+        val res = GraphAnnIndex.search(spark, d, qs, k = k, beam = beam, steps = steps,
+          maxDriverFrontier = mdf, candidateFilter = f)
+        (res.schema, res.collect().map(_.toString).toSeq)
+      }
+      val (drvSchema, drv) = run(100000)
+      val (distSchema, dist) = run(0)
+      assert(drv.nonEmpty, s"$name: empty result")
+      assert(drvSchema == distSchema, s"$name: schemas disagree: $drvSchema vs $distSchema")
+      assert(drv == dist, s"$name: regimes disagree")
     }
   }
 
@@ -122,10 +148,20 @@ class GraphAnnWalkSpec extends SparkSpec {
     assert(GraphAnnIndex.searchSelf(spark, d).collect().map(_.toString).toSeq == fresh)
   }
 
-  test("a driver-regime searchSelf, collected, runs at most steps + 8 Spark jobs") {
+  test("a driver-regime searchSelf, collected, runs at most steps + 3 Spark jobs") {
     val steps = 8
-    val jobs = SparkJobs.countIn(spark)(GraphAnnIndex.searchSelf(spark, dir, steps = steps).collect())
-    assert(jobs > 0 && jobs <= steps + 8, s"$jobs jobs for a $steps-step search")
+    val d = dir // built outside the count
+    var res: DataFrame = null
+    val jobs = SparkJobs.countIn(spark) {
+      res = GraphAnnIndex.searchSelf(spark, d, steps = steps)
+      res.collect()
+    }
+    assert(jobs > 0 && jobs <= steps + 3, s"$jobs jobs for a $steps-step search")
+    // the ranked answer comes back as a local relation: nothing left
+    // to read from the index once the search returns
+    val plan = res.queryExecution.optimizedPlan
+    assert(plan.isInstanceOf[LocalRelation], s"not a local relation:\n$plan")
+    assert(res.inputFiles.isEmpty, s"the result reads ${res.inputFiles.mkString(", ")}")
   }
 
   test("a collected search leaves no RDD it cached behind") {
