@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's scale-oriented defaults.
   *
-  * Locally we run `local[32]`; on a cluster the same confs apply with
-  * `shuffle.partitions` scaled to ~2-3x total executor cores. AQE is
+  * Locally the mains run `local[n]` with n = `SPARK_GRAFT_CPUS`
+  * ([[forMain]]), the tests `local[8]` and perfbench `local[2]`; on a
+  * cluster the same confs apply with `shuffle.partitions` scaled to
+  * ~2-3x total executor cores. AQE is
   * on everywhere so runtime stats re-plan skewed joins and coalesce
   * post-shuffle partitions — the knob that matters most at 100 TB.
   */
@@ -34,6 +36,15 @@ object GraftSession {
     // adopted-session path below swallows the runtime-set failure);
     // brings the graft_* SQL functions and the FuseMd5Prefix rule
     "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    // static AND JVM-wide: the generated-class cache is sized once,
+    // from the first session in the JVM, so this binds only when
+    // GraftSession builds that session — an adopted session keeps
+    // Spark's 100. At 100 entries each training op evicts the previous
+    // op's classes and recompiles ~155 of them. 8192 is the smallest
+    // power of two that holds every distinct class of a full
+    // graft.Verify pass (4,731 at sf0.001); holding them costs ~140 MB
+    // of heap (measured after a Verify pass at sf0.01)
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
   )
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder = {

@@ -3,8 +3,14 @@ package graft.operators
 import graft.functions.HashFunctions._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** Deduplication suite for LLM training-data curation.
   *
@@ -260,52 +266,82 @@ object Dedup {
     *
     * Iterative min-label propagation (the standard distributed CC:
     * each round, a node takes the min of its own and its neighbors'
-    * labels; converges in ≤ diameter rounds, O(log n) with the
-    * doubling effect of already-propagated minima). Near-dup
+    * labels; converges in ≤ diameter + 1 rounds). Near-dup
     * components are tiny and shallow in practice, so this is 2–3
     * rounds over an edge set that is itself the (small) pair list —
-    * NOT over the corpus. The convergence check reads one scalar
-    * per round; labels only ever decrease, so an unchanged sum is a
-    * fixpoint. */
+    * NOT over the corpus.
+    *
+    * The rounds run on RDDs, ONE Spark job each and no SQL planning.
+    * Both directions of every pair are read once into an edge RDD
+    * keyed by `dst` and hash-partitioned like the labels, so a round
+    * is a co-partitioned join of edges and labels (no shuffle),
+    * `reduceByKey` of the neighbor labels to `src` (the round's one
+    * shuffle), then the min with the old label — and the same action
+    * counts the labels that changed. Labels only ever decrease, so
+    * the first round that changes none is the fixpoint. Every 8th
+    * round's labels are local-checkpointed, so a long chain's lineage
+    * stays short.
+    *
+    * The result — (doc_id, cluster_id) in the ids' type, which must
+    * be integral, nullable as the ids are — is O(docs in pairs). It
+    * comes back to the driver ordered by doc_id, as a local relation,
+    * and every RDD the rounds persisted is released before return. A
+    * pair with a null id is no near-dup evidence and is dropped. */
   def nearDupClusters(pairs: DataFrame): DataFrame = {
-    // one pass over the (possibly expensive) pair pipeline: emit both
-    // edge directions via explode rather than a union of two scans
-    val e = pairs.select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("edge"))
-      .select(col("edge.src").as("src"), col("edge.dst").as("dst"))
-      .persist()
-    var labels = e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .persist()
-    // coalesce: sum over an empty pair list is null, not 0
-    var prevSum = labels.agg(coalesce(sum(col("label")), lit(0L))).head.getLong(0)
-    var converged = false
-    while (!converged) {
-      val nbrMin = e.join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("label")).as("nbr_min"))
-      // simple min-propagation: near-dup components are tiny and
-      // shallow (diameter 2–3), so extra machinery (pointer doubling,
-      // star contraction) costs more per round than it saves
-      val next = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .persist()
-      val nextSum = next.agg(coalesce(sum(col("label")), lit(0L))).head.getLong(0)
-      labels.unpersist()
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
+    // the type and nullability both id columns widen to
+    val ids = pairs.select(array(col("id_a"), col("id_b")).as("ids"))
+      .schema("ids").dataType.asInstanceOf[ArrayType]
+    val fromLong: Long => Any = ids.elementType match {
+      case LongType => identity
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case t => throw new IllegalArgumentException(
+        s"nearDupClusters needs integral ids, got ${t.sql}")
     }
-    // the result is O(docs-in-pairs) — materialize it eagerly
-    // (localCheckpoint) so the loop's cached edge/label tables can be
-    // dropped instead of lingering for the caller's lifetime
-    val out = labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint(true)
-    labels.unpersist()
-    e.unpersist()
-    out
+    // one pass over the (possibly expensive) pair pipeline
+    val raw = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .queryExecution.toRdd
+    val part = new HashPartitioner(math.max(1, raw.getNumPartitions))
+    val edges = raw
+      .flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else {
+          val (a, b) = (r.getLong(0), r.getLong(1))
+          Iterator((b, a), (a, b)) // (dst, src)
+        }
+      }
+      .partitionBy(part)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // every node is some edge's dst: a partition's distinct keys
+    var labels: RDD[(Long, Long)] = edges.mapPartitions(
+      _.map(_._1).toSet.iterator.map((id: Long) => (id, id)), preservesPartitioning = true)
+    var held = Option.empty[RDD[_]]
+    var rounds = 0
+    var changed = 1L
+    while (changed > 0) {
+      val next = edges.join(labels, part)
+        .map { case (_, (src, label)) => (src, label) }
+        .reduceByKey(part, math.min(_, _))
+        .join(labels, part)
+        .mapValues { case (nbrMin, old) => (math.min(nbrMin, old), nbrMin < old) }
+      rounds += 1
+      // a long chain re-seals its lineage every few rounds, so a task
+      // never ships a deep one
+      if (rounds % 8 == 0) next.localCheckpoint() else next.persist(StorageLevel.MEMORY_AND_DISK)
+      changed = next.filter(_._2._2).count()
+      held.foreach(_.unpersist(blocking = false))
+      held = Some(next)
+      labels = next.mapValues(_._1)
+    }
+    val out = labels.collect().sortBy(_._1)
+    held.foreach(_.unpersist(blocking = false))
+    edges.unpersist(blocking = false)
+    val schema = StructType(Seq(
+      StructField("doc_id", ids.elementType, ids.containsNull),
+      StructField("cluster_id", ids.elementType, ids.containsNull)))
+    pairs.sparkSession.createDataFrame(
+      out.toSeq.map { case (id, label) => Row(fromLong(id), fromLong(label)) }.asJava, schema)
   }
 
   /** SimHash near-dup pairs with hamming ≤ maxHamming (≤ 3). Blocking

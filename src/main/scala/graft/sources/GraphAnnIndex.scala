@@ -122,29 +122,49 @@ object GraphAnnIndex {
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The newest meta generation (most applied increments). A commit
+    * writes its meta beside the old one and only then deletes the old
+    * one ([[writeMeta]]), so a read that lists both takes the new; a
+    * file deleted between the listing and the read is skipped, and a
+    * read left with no row lists again once. */
   private[graft] def readMeta(spark: SparkSession, dir: String): Meta = {
-    val r = spark.read.schema(MetaSchema).parquet(s"$dir/meta").head()
+    def applied(r: Row): Seq[String] =
+      Option(r.getAs[String]("applied_fps")).filter(_.nonEmpty)
+        .map(_.split(",").toSeq).getOrElse(Nil)
+    def newest() = spark.read.schema(MetaSchema).option("ignoreMissingFiles", "true")
+      .parquet(s"$dir/meta").collect().maxByOption(applied(_).size)
+    val r = newest().orElse(newest()).getOrElse(
+      throw new java.io.FileNotFoundException(s"no index meta under $dir/meta"))
     // getInt throws on NULL: a meta missing a field is unreadable
     // (ensureBuilt then rebuilds), never silently 0
     def int(c: String) = r.getInt(r.fieldIndex(c))
     Meta(int("m"), int("tables"), int("n_bits"), int("dim"), int("p_buckets"),
       int("entry_cap"), int("pq_m"), int("n_codes"),
-      r.getAs[String]("corpus_fp"),
-      Option(r.getAs[String]("applied_fps")).filter(_.nonEmpty)
-        .map(_.split(",").toSeq).getOrElse(Nil),
+      r.getAs[String]("corpus_fp"), applied(r),
       // a meta written before vec_type was recorded: take the type
       // from the entries footer (one inference job)
       Option(r.getAs[String]("vec_type")).getOrElse(
         spark.read.parquet(s"$dir/entries").schema("v").dataType.catalogString))
   }
 
+  /** Commits `meta` in two steps, neither of which leaves `meta/`
+    * empty: the new file is appended beside the old ones, then the old
+    * ones are deleted. A reader racing the commit sees the old or the
+    * new generation; a crash between the steps leaves both, and
+    * [[readMeta]] takes the new. */
   private def writeMeta(spark: SparkSession, dir: String, meta: Meta): Unit = {
     import spark.implicits._
+    val f = fs(spark, dir)
+    val p = new Path(s"$dir/meta")
+    // the old generation: every file but the _SUCCESS marker the append rewrites
+    val old = if (f.exists(p)) f.listStatus(p).map(_.getPath).filterNot(_.getName.startsWith("_"))
+      else Array.empty[Path]
     Seq((meta.m, meta.tables, meta.nBits, meta.dim, meta.pBuckets, meta.entryCap,
       meta.pqM, meta.nCodes, meta.corpusFp, meta.appliedFps.mkString(","), meta.vecType))
       .toDF("m", "tables", "n_bits", "dim", "p_buckets", "entry_cap",
         "pq_m", "n_codes", "corpus_fp", "applied_fps", "vec_type")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      .coalesce(1).write.mode("append").parquet(s"$dir/meta")
+    old.foreach(f.delete(_, false))
   }
 
   /** The frozen assignment read back in [[Similarity.bucketAssign]]
@@ -238,6 +258,10 @@ object GraphAnnIndex {
                    pqM: Int = 8, nCodes: Int = 16,
                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = emb.sparkSession
+    // the old meta goes first: a build that dies midway leaves no meta
+    // (ensureBuilt rebuilds) instead of one describing a half-rewritten
+    // layout, and no generation of the old index outranks the new meta
+    fs(spark, dir).delete(new Path(s"$dir/meta"), true)
     val nRows = emb.count()
     val bits = if (nbits > 0) nbits else Similarity.autoBits(nRows)
     val vecType = emb.schema(vecCol).dataType.catalogString

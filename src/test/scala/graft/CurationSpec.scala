@@ -81,6 +81,72 @@ class CurationSpec extends SparkSpec {
     assert(labels == Set(1L))
   }
 
+  test("near-dup clustering holds ids near Long.MaxValue / 2") {
+    // five labels of ~4.6e18 overflow a sum under ANSI
+    val b = Long.MaxValue / 2
+    val pairs = Seq((b + 1, b + 2), (b + 2, b + 5), (b + 7, b + 9)).toDF("id_a", "id_b")
+    val got = Dedup.nearDupClusters(pairs).as[(Long, Long)].collect().toSeq
+    assert(got == Seq((b + 1, b + 1), (b + 2, b + 1), (b + 5, b + 1), (b + 7, b + 7), (b + 9, b + 7)))
+  }
+
+  test("near-dup clustering equals the SQL reference in rows, order and schema") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types._
+    // seeded random graphs: repeated, reversed and self pairs included
+    def graph(s: org.apache.spark.sql.SparkSession, seed: Int, nullable: Boolean): DataFrame = {
+      val rnd = new scala.util.Random(seed)
+      val rows = Seq.fill(rnd.nextInt(60))(
+        org.apache.spark.sql.Row(rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
+      val schema = StructType(Seq(StructField("id_a", LongType, nullable),
+        StructField("id_b", LongType, nullable)))
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    }
+    def same(label: String, pairs: DataFrame): Unit = {
+      val want = NearDupReference.nearDupClusters(pairs)
+      val got = Dedup.nearDupClusters(pairs)
+      assert(got.schema == want.schema, s"$label: ${got.schema} vs ${want.schema}")
+      assert(got.collect().toSeq == want.collect().toSeq, label)
+    }
+    val narrow = spark.newSession()
+    narrow.conf.set("spark.sql.shuffle.partitions", "1")
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "67")
+    (1 to 3).foreach { seed =>
+      val nullable = seed % 2 == 0
+      same(s"seed $seed", graph(spark, seed, nullable))
+      same(s"seed $seed repartition(7)", graph(spark, seed, nullable).repartition(7))
+      same(s"seed $seed int ids", graph(spark, seed, nullable)
+        .select($"id_a".cast("int").as("id_a"), $"id_b".cast("int").as("id_b")))
+      same(s"seed $seed shuffle.partitions=1", graph(narrow, seed, nullable))
+      same(s"seed $seed shuffle.partitions=67", graph(wide, seed, nullable))
+    }
+    // the pair pipeline itself, read from parquet (nullable ids)
+    same("minhash pairs", Dedup.minhashLshPairs(Tables.documents(spark, sf)))
+  }
+
+  test("near-dup clustering runs at most rounds + 3 Spark jobs") {
+    // a chain whose minimum sits at one end: node 5 is 4 hops from
+    // label 1, so 4 rounds change labels and a 5th confirms the fixpoint
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
+    val rounds = 5
+    var got = Seq.empty[(Long, Long)]
+    val jobs = SparkJobs.countIn(spark) {
+      got = Dedup.nearDupClusters(chain).as[(Long, Long)].collect().toSeq
+    }
+    assert(got == (1L to 5L).map(_ -> 1L))
+    assert(jobs <= rounds + 3, s"$jobs jobs for $rounds rounds")
+  }
+
+  test("near-dup clustering leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a 20-node chain runs 20 rounds: two of them local-checkpoint
+    val chain = (1L until 20L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    val got = Dedup.nearDupClusters(chain).as[(Long, Long)].collect().toSeq
+    assert(got == (1L to 20L).map(_ -> 1L))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("sequence packing conserves tokens and respects block budget") {
     val chunks = Medallion.pipeline(Tables.documents(spark, sf))
     val packed = Chunker.packSequences(chunks)

@@ -55,12 +55,9 @@ class GraphAnnStreamSpec extends SparkSpec {
       .start()
     try {
       val deadline = System.currentTimeMillis() + 60000
-      // the poll races the maintainer's meta overwrite (single-writer
-      // is the layout contract; this reader is test-only) — a torn
-      // read just polls again
-      def applied(): Int =
-        try GraphAnnIndex.readMeta(spark, dir).appliedFps.size
-        catch { case scala.util.control.NonFatal(_) => -1 }
+      // the poll races the maintainer's meta commits: every read must
+      // see one whole generation
+      def applied(): Int = GraphAnnIndex.readMeta(spark, dir).appliedFps.size
       while (System.currentTimeMillis() < deadline && applied() < 2)
         Thread.sleep(200)
     } finally { q.stop(); q.awaitTermination(30000) }
@@ -72,5 +69,35 @@ class GraphAnnStreamSpec extends SparkSpec {
     val fused = GraphWalkReference.graphTopK(emb, nbits = bits)
     assert(served.collect().map(_.toString).toSeq ==
       fused.collect().map(_.toString).toSeq)
+  }
+
+  test("a reader racing the meta commit never fails, and a torn commit stays readable") {
+    val n = emb.count()
+    val dir = Files.createTempDirectory("gix_meta").toString + "/ix"
+    GraphAnnIndex.buildAndSave(emb.where(col("vec_id") < n / 2), dir)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    var failure = Option.empty[Throwable]
+    val reader = new Thread(() =>
+      try while (!stop.get()) seen.add(GraphAnnIndex.readMeta(spark, dir).appliedFps.size)
+      catch { case e: Throwable => failure = Some(e) })
+    reader.start()
+    try GraphAnnIndex.appendIncremental(emb.where(col("vec_id") >= n / 2 && col("vec_id") < 3 * n / 4),
+      dir, incrementId = Some("inc-1"))
+    finally { stop.set(true); reader.join(60000) }
+    assert(failure.isEmpty, s"a racing read failed: $failure")
+    assert(!seen.isEmpty && seen.stream().allMatch(g => g == 0 || g == 1), s"generations $seen")
+
+    // a crash between the commit's two steps: the new meta is written
+    // and the old one is still beside it
+    val meta = new java.io.File(dir, "meta")
+    def parts = meta.listFiles().filter(_.getName.startsWith("part-"))
+    val gen1 = parts.map(f => f -> Files.readAllBytes(f.toPath))
+    GraphAnnIndex.appendIncremental(emb.where(col("vec_id") >= 3 * n / 4),
+      dir, incrementId = Some("inc-2"))
+    gen1.foreach { case (f, bytes) => Files.write(f.toPath, bytes) }
+    assert(parts.length == 2)
+    assert(GraphAnnIndex.readMeta(spark, dir).appliedFps == Seq("inc-1", "inc-2"))
+    assert(GraphAnnIndex.searchSelf(spark, dir).count() > 0)
   }
 }
