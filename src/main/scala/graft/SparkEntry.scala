@@ -1094,8 +1094,8 @@ object SparkEntry {
     }),
     // the DISTRIBUTED-frontier branch of the SAME walk, graded: with
     // maxDriverFrontier forced to 0 every step carries the frontier
-    // as a localCheckpointed DataFrame and probes the edge table via
-    // broadcast-hash join — the branch that serves when nq·beam
+    // as a distributed DataFrame and probes the edge table via a
+    // size-routed join — the branch that serves when nq·beam
     // outgrows the driver (the 100× serving shape). Must be
     // hash-identical to ann_graph_topk: branch choice is a pure
     // execution-strategy swap, never a result change.
@@ -1193,11 +1193,11 @@ object SparkEntry {
       graft.sources.GraphAnnIndex.searchSelf(s, dir)
     }),
     // PQ-compressed graph serving (DiskANN memory model), off the
-    // SAME persisted index the raw walk uses: the walk reads only
-    // (src, dst, dcodes, pb) — column pruning IS the footprint win —
-    // scores by ADC against the broadcast LUT, and reranks the final
-    // candidates at full precision from the id-bucketed nodes table.
-    // All four graph entries share ONE fingerprint-guarded build.
+    // SAME persisted index and the SAME step kernel as the raw walk:
+    // the walk reads only (src, dst, dcodes) — column pruning IS the
+    // footprint win — scores by ADC against each query vector's LUT,
+    // and reranks the final candidates at full precision from the
+    // id-bucketed nodes table. The graph entries share ONE build.
     "ann_graph_pq_topk" -> ((s, d) => {
       val dir = s"${System.getProperty("java.io.tmpdir")}/graft_gix_${math.abs(d.hashCode)}"
       graft.sources.GraphAnnIndex.ensureBuilt(Tables.embeddings(s, d), dir)
@@ -1210,12 +1210,10 @@ object SparkEntry {
       Similarity.recallAtK(graft.sources.GraphAnnIndex.searchPqSelf(s, dir),
         Similarity.bruteTopK(emb))
     }),
-    // the distributed-frontier branch of the COMPRESSED walk, graded
-    // (the PQ twin of ann_graph_dist): ADC scoring + broadcast LUT
-    // with the frontier carried as a localCheckpointed DataFrame —
-    // the serving shape when nq·beam outgrows the driver AND the
-    // corpus outgrows full-precision residency. Hash-identical to
-    // ann_graph_pq_topk by construction.
+    // the distributed-frontier branch of the COMPRESSED walk (the PQ
+    // twin of ann_graph_dist): SQL ADC against a joined LUT table, the
+    // frontier a distributed DataFrame — the shape when nq·beam
+    // outgrows the driver. Hash-identical to ann_graph_pq_topk.
     "ann_graph_pq_dist" -> ((s, d) => {
       val dir = s"${System.getProperty("java.io.tmpdir")}/graft_gix_${math.abs(d.hashCode)}"
       graft.sources.GraphAnnIndex.ensureBuilt(Tables.embeddings(s, d), dir)

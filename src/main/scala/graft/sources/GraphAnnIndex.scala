@@ -71,28 +71,25 @@ import scala.collection.mutable.{ArrayBuffer, LongMap}
   * path uses.
   *
   * Search cost: a search reads ZERO corpus rows; corpus-scale work
-  * happens exactly once, at build. When the frontier fits the driver
-  * (nq·max(beam, entries) ≤ `maxDriverFrontier` rows), round 0
-  * scores entries × queries on the driver and each of steps 1 to
-  * `steps` is ONE Spark job (no SQL planning) over a per-search
-  * cached adjacency: src → its live, delete-masked out-edges with
-  * `dv`/`dnrm` inline. Building that cache scans the WHOLE live edge
-  * table once per search (O(edges) bytes, the price of planning-free
-  * steps); each step then looks up only its frontier's lists,
-  * O(beam·degree) candidates per query. Tasks cut per-query top lists
-  * and the driver merges them; the last step cuts at k, so the ranked
-  * answer returns as a local relation and nothing runs after the last
-  * step job. When a caller serves a query batch too large to hold the
-  * frontier driver-side, the loop degrades to the distributed shape:
-  * the live edge table pinned with persist (again a whole-table
-  * read), a localCheckpointed frontier, a pb-pruned probe per step
-  * (the frontier's distinct pb set is ≤ pBuckets rows — one cheap
-  * aggregate per round), a SIZE-ROUTED join — the frontier broadcasts
-  * only below `maxBroadcastFrontier` rows; above it the join shuffles
-  * on src (sort-merge), so no step ever materializes the frontier on
-  * the driver — and a lazy top-k exchange ranks the last step. Branch
-  * choice is an execution-strategy swap, never a result change
-  * (spec-pinned).
+  * happens exactly once, at build. The raw and the PQ search run the
+  * same two walks with their own scorer and edge payload (`dv`/`dnrm`
+  * or `dcodes`). When the frontier fits the driver (nq·max(beam,
+  * entries) ≤ `maxDriverFrontier` rows), round 0 scores entries ×
+  * queries on the driver and each of steps 1 to `steps` is ONE Spark
+  * job (no SQL planning) over a per-search cached adjacency: src → its
+  * live, delete-masked out-edges with the payload inline. Building that
+  * cache scans the WHOLE live edge table once per search; each step
+  * then looks up only its frontier's lists. Tasks cut per-query top
+  * lists and the driver merges them. The raw walk's last step cuts at
+  * k; the PQ walk's keeps every candidate, and one pruned `nodes/`
+  * fetch reranks them on the driver. Either answer returns as a local
+  * relation. A query batch too large for the driver walks the
+  * distributed shape: the walk's live edge columns persisted for the
+  * walk, each step's beam read back from its own shuffle outputs (no
+  * persisted copy), a pb-pruned probe, a SIZE-ROUTED join (broadcast
+  * below `maxBroadcastFrontier` rows, a sort-merge shuffle above), and
+  * a lazy top-k exchange that ranks the last step. Branch choice is an
+  * execution-strategy swap, never a result change (spec-pinned).
   */
 object GraphAnnIndex {
 
@@ -471,53 +468,128 @@ object GraphAnnIndex {
              maxDriverFrontier: Int = 100000,
              maxBroadcastFrontier: Long = 1000000L,
              candidateFilter: Option[Column] = None): DataFrame =
-    searchWith(spark, dir, readMeta(spark, dir), queries, k, beam, steps, entries,
+    serve(spark, dir, readMeta(spark, dir), queries, pq = false, k, beam, steps, entries,
       maxDriverFrontier, maxBroadcastFrontier, candidateFilter)
 
-  private def searchWith(spark: SparkSession, dir: String, meta: Meta, queries: DataFrame,
-                         k: Int, beam: Int, steps: Int, entries: Int,
-                         maxDriverFrontier: Int, maxBroadcastFrontier: Long,
-                         candidateFilter: Option[Column]): DataFrame = {
+  /** [[search]] (`pq` false) or [[searchPq]] (`pq` true): one regime
+    * choice, one driver walk, one distributed walk; the two differ in
+    * the edge payload, the scorer and the PQ rerank. */
+  private def serve(spark: SparkSession, dir: String, meta: Meta, queries: DataFrame,
+                    pq: Boolean, k: Int, beam: Int, steps: Int, entries: Int,
+                    maxDriverFrontier: Int, maxBroadcastFrontier: Long,
+                    candidateFilter: Option[Column]): DataFrame = {
     // node-level delete tombstones mask AUTOMATICALLY on every serve
     // path — a deleted vector must never be returned, whoever calls
     val delMask = deleteMask(spark, dir)
     val edges = liveEdges(spark, dir, Some(meta))
-    // round 0's entry points: deleted entries are excluded from ROUND 0
-    // (unlike the metadata candidateFilter, which starts at round 1):
-    // this is what makes the masked serve bit-equal to the
-    // post-compaction serve — in the reclaimed layout the entry row is
-    // physically gone, so its out-edges must not seed the walk here
-    // either
+    // round 0's entry points (id, v, nrm), deleted ones excluded (the
+    // candidateFilter starts at round 1): the masked serve then equals
+    // the post-compaction serve, where the entry row is gone
     val ent = maskDeleted(readEntries(spark, dir, meta.vecType)
       .where(col("id") < math.min(entries, meta.entryCap)), "id", delMask)
+    val subDim = meta.dim / meta.pqM
+    lazy val cb = spark.read.schema(s"code bigint, sub int, cv ${meta.vecType}")
+      .parquet(s"$dir/codebook")
+    // PQ entry payloads: a frozen-codebook encode (deterministic —
+    // identical to the stored codes)
+    lazy val entC = pqCodesArr(ent, cb, meta.pqM, subDim)
+      .select(col("id").as("node"), col("codes").as("dcodes"))
+    // the id-bucketed node table: the PQ rerank's one fetch of raw vectors
+    lazy val nodesTbl = spark.read.schema(s"id bigint, v ${meta.vecType}, nrm double, nb bigint")
+      .parquet(s"$dir/nodes")
     val q = queries.select(col("query_id").cast("long"), col("qv"))
     // ONE job sizes AND fetches the batch (the deleteMask pattern):
-    // at most qCap+1 rows come back, and qCap+1 means "too many for
-    // the driver" — the frontier bound nq·max(beam, entries) would
+    // qCap+1 rows mean the frontier bound nq·max(beam, entries) would
     // exceed maxDriverFrontier
     val qCap =
       if (maxDriverFrontier < 0) -1
       else math.min(maxDriverFrontier / math.max(1, math.max(beam, entries)), Int.MaxValue - 1)
     val qRows = q.limit(qCap + 1).collect()
-    if (qRows.length <= qCap)
-      walkOnDriver(spark, meta, edges, ent, qRows, q.schema("qv").dataType,
-        k, beam, steps, candidateFilter, delMask)
-    else
+    if (qRows.length <= qCap) {
+      // sorted by id: the order the ranked rows come back in
+      val byId = qRows.indices.toArray.groupBy(qRows(_).getLong(0)).toArray.sortBy(_._1)
+      val raw = rawBatch(qRows, byId, q.schema("qv").dataType, meta)
+      val ranked =
+        if (!pq) walkOnDriver(spark,
+          maskDeleted(edges.select(col("src"), col("dst"), col("dv"), col("dnrm")), "dst", delMask),
+          raw, ent, k, beam, steps, candidateFilter)
+        else {
+          // each query ROW's LUT, keyed by its index in qRows: the terms
+          // project over local rows, which Spark evaluates on the driver
+          val cbRows = cb.where(col("sub").between(0, meta.pqM - 1)).collect()
+          val luts = spark.createDataFrame(java.util.Arrays.asList(
+              (for (i <- qRows.indices; c <- cbRows) yield Row(i, qRows(i).get(1), c.get(0),
+                c.get(1), c.get(2))): _*),
+              StructType(StructField("key", IntegerType) +: q.schema("qv") +: cb.schema.fields))
+            .select(col("key"), col("sub"), col("code"), lutTerm(subDim)).collect()
+            .groupBy(_.getInt(0)).map { case (i, rs) => i -> adcTerms(rs.sortBy(r =>
+              (r.getInt(1), r.getLong(2))).map(_.get(3).asInstanceOf[java.lang.Double])) }
+          // the last step keeps every distinct candidate, own id dropped
+          val cands = walkOnDriver(spark,
+            maskDeleted(edges.select(col("src"), col("dst"), col("dcodes"), lit(0.0)), "dst", delMask),
+            PqBatch(raw.ids, byId.map(_._2.map(luts.get(_).orNull)), meta.nCodes),
+            entC.select(col("node"), col("dcodes"), lit(0.0)), Int.MaxValue, beam, steps,
+            candidateFilter)
+          // one partition- and row-group-pruned fetch of the DISTINCT
+          // candidate ids, then the full-precision rerank
+          val ids = cands.flatMap(_.map(_._2)).distinct
+          val vecs = LongMap.from(if (ids.isEmpty) Nil else collectEdges(nodesTbl
+              .where(col("nb").isin(ids.map(Math.floorMod(_, meta.pBuckets.toLong)).distinct: _*) &&
+                col("id").isin(ids: _*))
+              .select(col("id"), col("v"), col("nrm"))).map(e => e.dst -> e))
+          Array.tabulate(raw.ids.length) { i =>
+            TopKAgg.cut(for ((_, n) <- cands(i); e <- vecs.get(n).toSeq; j <- 0 until raw.width(i);
+                             s <- Option(raw.sim(i, j, e))) yield (s.doubleValue, n), k, dedupIds = true)
+          }
+        }
+      spark.createDataFrame(java.util.Arrays.asList(
+        (for (i <- raw.ids.indices; ((s, n), r) <- ranked(i).zipWithIndex)
+          yield Row(raw.ids(i), n, r + 1L, s)): _*), RankedSchema)
+    } else {
+      // the query table (query_id, qv, qnrm), pinned behind one hash
+      // exchange so every step reads the same rows
+      val qd = pinned(q.select(col("query_id"), col("qv"), norm(col("qv")).as("qnrm"))
+        .repartition(col("query_id")))
+      val nq = qd.count()
+      // raw: cosine against (qv, qnrm). PQ: ADC against each query
+      // vector's LUT, keyed by the whole (query_id, qv) so a repeated
+      // id keeps one LUT per vector
+      val (side, sim, payload, entP) =
+        if (!pq) (qd, SimCol, Seq(col("dv"), col("dnrm")),
+          ent.select(col("id").as("node"), col("v").as("dv"), col("nrm").as("dnrm")))
+        else (pinned(qd.select(struct(col("query_id"), col("qv")).as("key"), col("qv"))
+            .distinct().crossJoin(broadcast(cb.where(col("sub").between(0, meta.pqM - 1))))
+            .select(col("key"), col("sub"), col("code"), lutTerm(subDim))
+            .groupBy(col("key"))
+            .agg(sort_array(collect_list(struct(col("sub"), col("code"), col("lv")))).as("scl"))
+            .select(col("key.query_id").as("query_id"), expr("transform(scl, x -> x.lv)").as("lutv"))),
+          adcCol(meta.nCodes), Seq(col("dcodes")), entC)
+      def score(cand: DataFrame): DataFrame =
+        cand.join(sized(side, nq, maxBroadcastFrontier), Seq("query_id"))
+          .select(col("query_id"), col("node"), sim)
+      val last = walkDistributed(meta, edges, payload,
+        score(qd.select(col("query_id")).crossJoin(entP)), score,
+        nq * math.max(beam, entries), beam, steps, maxBroadcastFrontier, candidateFilter, delMask)
       // the final candidate union still carries duplicate (query, node)
       // rows; a repeated query_id gives them different sims. The
       // DISTINCT-id rank keeps each node's best sim over all the id's
       // vectors, and its partial cuts merge exactly
       Similarity.rankTopK(
-        walkDistributed(meta, edges, ent, q, beam, steps, entries,
-          maxBroadcastFrontier, candidateFilter, delMask)
-          .where(col("node") =!= col("query_id"))
-          .select(col("query_id"), col("node").as("neighbor_id"), col("sim")), k,
-        dedup = true)
+        if (!pq) last.where(col("node") =!= col("query_id"))
+          .select(col("query_id"), col("node").as("neighbor_id"), col("sim"))
+        else
+          // full-precision rerank from the id-bucketed node table: the
+          // candidate union (~nq·beam·degree rows, NOT frontier-bounded)
+          // dedups once and shuffles into the fetch
+          nodesTbl.join(last.select(col("query_id"), col("node")).distinct().hint("merge"),
+              col("node") === col("id"))
+            .join(sized(qd, nq, maxBroadcastFrontier), Seq("query_id"))
+            .where(col("node") =!= col("query_id"))
+            .select(col("query_id"), col("node").as("neighbor_id"),
+              round(cosinePrenormed(dot(col("qv"), col("v")), col("qnrm"), col("nrm")), 6)
+                .as("sim")), k, dedup = true)
+    }
   }
-
-  /** The (query_id, node, sim) rows a beam step scores and cuts. */
-  private val ScoreSchema = StructType(Seq(StructField("query_id", LongType),
-    StructField("node", LongType), StructField("sim", DoubleType)))
 
   /** A search's result: [[Similarity.rankTopK]]'s output schema. */
   private val RankedSchema = StructType(Seq(StructField("query_id", LongType),
@@ -546,20 +618,108 @@ object GraphAnnIndex {
     }
   }
 
-  private def isFloatVec(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
+  /** A PQ LUT term over (qv, sub, cv): round(sub-vector · codeword,
+    * 6). A query's LUT lists its terms in (sub, code) order, so term
+    * sub·nCodes + code is the one code `code` of sub `sub` picks. */
+  private def lutTerm(subDim: Int): Column =
+    round(dot(slice(col("qv"), col("sub") * subDim + 1, lit(subDim)), col("cv")), 6).as("lv")
+
+  /** The PQ walk's ADC score in SQL over (lutv, dcodes): each code
+    * picks its LUT term, and the terms sum as exact decimals. */
+  private[graft] def adcCol(nCodes: Int): Column =
+    expr(s"""cast(aggregate(
+      transform(dcodes, (c, s) -> element_at(lutv, cast(s * $nCodes + c + 1 as int))),
+      cast(0 as decimal(28,6)),
+      (acc, v) -> cast(acc + cast(v as decimal(18,6)) as decimal(28,6)),
+      acc -> acc) as double)""").as("sim")
+
+  private val NullTerm = Long.MinValue // a NULL LUT term
+
+  /** A LUT as [[adcSim]] reads it: each term's `cast(v as
+    * decimal(18,6))` as its unscaled long (HALF_UP over the shortest
+    * decimal repr, the repr Spark casts a double from). A term beyond
+    * decimal(18,6) fails, as the ANSI cast does. */
+  private[graft] def adcTerms(lutv: Seq[java.lang.Double]): Array[Long] =
+    lutv.toArray.map { v =>
+      if (v == null) NullTerm
+      else {
+        val u = java.math.BigDecimal.valueOf(v.doubleValue)
+          .setScale(6, java.math.RoundingMode.HALF_UP).unscaledValue().longValueExact()
+        if (math.abs(u) >= 1000000000000000000L)
+          throw new ArithmeticException(s"LUT term $v overflows decimal(18,6)")
+        u
+      }
+    }
+
+  /** [[adcCol]] outside SQL, over [[adcTerms]]: decimal addition is
+    * exact, so the unscaled terms add with `addExact` in sub order, and
+    * the sum becomes a double as Spark casts `decimal(28,6)` to double
+    * (`BigDecimal.doubleValue`). A NULL code or term scores NULL.
+    * GraphAnnWalkSpec pins it bit-equal to the SQL form. */
+  private[graft] def adcSim(terms: Array[Long], nCodes: Int, codes: ArrayData): java.lang.Double = {
+    if (terms == null || codes == null) return null
+    var acc = 0L
+    var s = 0
+    while (s < codes.numElements()) {
+      if (codes.isNullAt(s)) return null
+      val t = terms(Math.toIntExact(s.toLong * nCodes + codes.getLong(s)))
+      if (t == NullTerm) return null
+      acc = Math.addExact(acc, t)
+      s += 1
+    }
+    java.math.BigDecimal.valueOf(acc, 6).doubleValue()
   }
 
-  /** One out-edge in the search-time adjacency cache. */
-  private final case class Edge(dst: Long, dv: ArrayData, dnrm: Double)
+  private def isFloatVec(t: DataType): Boolean =
+    t match { case ArrayType(FloatType, _) => true; case _ => false }
+
+  /** One out-edge in the search-time adjacency cache: the destination
+    * and its payload, (dv, dnrm) for the raw walk and (dcodes, unused)
+    * for the PQ walk. A NULL payload scores NULL. */
+  private final case class Edge(dst: Long, d: ArrayData, dnrm: Double)
 
   /** The query batch as the step tasks read it: one entry per distinct
     * query_id, holding every vector the batch gave that id. A repeated
     * id walks as ONE query whose candidates score against each of its
-    * vectors, as the distributed regime's join on query_id scores them. */
-  private final case class QueryBatch(ids: Array[Long], vecs: Array[Array[ArrayData]],
-                                      isFloat: Boolean, nrms: Array[Array[Double]])
+    * vectors, as the distributed regime's join on query_id scores them.
+    * `sim` scores query i's j-th vector against an edge's payload. */
+  private sealed trait QueryBatch extends Serializable {
+    def ids: Array[Long]
+    def width(i: Int): Int
+    def sim(i: Int, j: Int, e: Edge): java.lang.Double
+  }
+
+  /** Cosine against raw vectors ([[walkSim]]). */
+  private final case class RawBatch(ids: Array[Long], vecs: Array[Array[ArrayData]],
+                                    isFloat: Boolean, nrms: Array[Array[Double]],
+                                    dFloat: Boolean) extends QueryBatch {
+    def width(i: Int): Int = vecs(i).length
+    def sim(i: Int, j: Int, e: Edge): java.lang.Double =
+      if (vecs(i)(j) == null || e.d == null) null
+      else walkSim(vecs(i)(j), isFloat, nrms(i)(j), e.d, dFloat, e.dnrm)
+  }
+
+  /** ADC against PQ codes ([[adcSim]]); a vector with no LUT scores NULL. */
+  private final case class PqBatch(ids: Array[Long], terms: Array[Array[Array[Long]]],
+                                   nCodes: Int) extends QueryBatch {
+    def width(i: Int): Int = terms(i).length
+    def sim(i: Int, j: Int, e: Edge): java.lang.Double = adcSim(terms(i)(j), nCodes, e.d)
+  }
+
+  /** The batch `byId` groups (id → its row indices in `qRows`). */
+  private def rawBatch(qRows: Array[Row], byId: Array[(Long, Array[Int])], qvType: DataType,
+                       meta: Meta): RawBatch = {
+    val toQ = CatalystTypeConverters.createToCatalystConverter(qvType)
+    val vecs = byId.map(_._2.map(r => toQ(qRows(r).get(1)).asInstanceOf[ArrayData]))
+    val qFloat = isFloatVec(qvType)
+    RawBatch(byId.map(_._1), vecs, qFloat, vecs.map(_.map(v =>
+        if (v == null) Double.NaN else math.sqrt(NativeExprs.dotProductEval(v, v, qFloat, qFloat)))),
+      isFloatVec(DataType.fromDDL(meta.vecType)))
+  }
+
+  /** The (query_id, node, sim) rows a beam step scores and cuts. */
+  private val ScoreSchema = StructType(Seq(StructField("query_id", LongType),
+    StructField("node", LongType), StructField("sim", DoubleType)))
 
   /** `candidateFilter` resolved once against (query_id, node, sim) and
     * bound to those ordinals, for evaluation outside a SQL plan. */
@@ -591,8 +751,7 @@ object GraphAnnIndex {
     * (the [[TopKAgg]] order). With `dropSelf` (the last step) a query's
     * own id is never a candidate. */
   private def stepTask(parts: Iterator[LongMap[Array[Edge]]], qs: QueryBatch,
-                       frontier: Array[Array[Long]], dFloat: Boolean, cut: Int,
-                       dropSelf: Boolean,
+                       frontier: Array[Array[Long]], cut: Int, dropSelf: Boolean,
                        filter: Option[Expression]): Array[Array[(Double, Long)]] = {
     val pred = predicate(filter)
     val row = new SpecificInternalRow(ScoreSchema.map(_.dataType))
@@ -603,10 +762,8 @@ object GraphAnnIndex {
         val qid = qs.ids(i)
         frontier(i).foreach { u =>
           adj.get(u).foreach(_.foreach { e =>
-            if (!(dropSelf && e.dst == qid)) qs.vecs(i).indices.foreach { j =>
-              val v = qs.vecs(i)(j)
-              val s = if (v == null) null
-                      else walkSim(v, qs.isFloat, qs.nrms(i)(j), e.dv, dFloat, e.dnrm)
+            if (!(dropSelf && e.dst == qid)) (0 until qs.width(i)).foreach { j =>
+              val s = qs.sim(i, j, e)
               if (s != null && passes(pred, row, qid, e.dst, s)) out(i) += ((s, e.dst))
             }
           })
@@ -619,43 +776,25 @@ object GraphAnnIndex {
 
   /** The driver regime: the query batch and each step's frontier
     * (≤ nq·max(beam, entries) rows) live on the driver. Round 0 scores
-    * entries × queries on the driver; each of steps 1 to `steps` is ONE
-    * `runJob` over a per-search cached adjacency RDD (src → its live,
-    * delete-masked out-edges with `dv`/`dnrm` inline, built from the
-    * first step's scan of the live edge table), with the queries and
-    * the frontier shipped by broadcast. Each task cuts a per-query top
-    * list and the driver merges those lists with the frontier rows:
-    * rank inside partitions, merge the bounded lists once. Steps 1 to
+    * the entry rows `ent` (id, payload, norm) × queries on the driver;
+    * each of steps 1 to `steps` is ONE `runJob` over a per-search cached
+    * adjacency RDD (src → its out-edges, built by the first step from
+    * the (src, dst, payload, norm) rows of `payload`), with the queries
+    * and the frontier shipped by broadcast. Tasks cut per-query top
+    * lists; the driver merges them with the frontier rows. Steps 1 to
     * steps-1 cut at `beam`; the last step drops each query's own id and
-    * cuts at `k`, so the ranked answer is born on the driver and comes
-    * back as a local relation — nothing reads index bytes after the
-    * last step job. With `steps` < 1 the answer is round 0's entries. */
-  private def walkOnDriver(spark: SparkSession, meta: Meta, edges: DataFrame,
-                           ent: DataFrame, qRows: Array[Row], qvType: DataType,
-                           k: Int, beam: Int, steps: Int, candidateFilter: Option[Column],
-                           delMask: Option[Either[Array[Long], DataFrame]]): DataFrame = {
+    * cuts at `last`. With `steps` < 1 the answer is round 0's entries.
+    * Returns each query's list, in `qs.ids` order. */
+  private def walkOnDriver(spark: SparkSession, payload: DataFrame, qs: QueryBatch,
+                           ent: DataFrame, last: Int, beam: Int, steps: Int,
+                           candidateFilter: Option[Column]): Array[ArrayBuffer[(Double, Long)]] = {
     val sc = spark.sparkContext
-    // sorted by id: the order the ranked rows come back in
-    val byId = qRows.groupBy(_.getLong(0)).toArray.sortBy(_._1)
-    val nq = byId.length
-    val qIds = byId.map(_._1)
-    val toQ = CatalystTypeConverters.createToCatalystConverter(qvType)
-    val qVecs = byId.map(_._2.map(r => toQ(r.get(1)).asInstanceOf[ArrayData]))
-    val qFloat = isFloatVec(qvType)
-    val qNrms = qVecs.map(_.map(v =>
-      if (v == null) Double.NaN else math.sqrt(NativeExprs.dotProductEval(v, v, qFloat, qFloat))))
-    val vType = DataType.fromDDL(meta.vecType)
-    val dFloat = isFloatVec(vType)
-    val toD = CatalystTypeConverters.createToCatalystConverter(vType)
+    val nq = qs.ids.length
     // round 0: every (query vector, entry) pair, NULL sims kept — an
-    // entry with an undefined cosine is still expanded at step 1
-    val entRows = ent.select(col("id"), col("v"), col("nrm")).collect()
+    // entry with an undefined score is still expanded at step 1
+    val entEdges = collectEdges(ent)
     var frontier: Array[Array[(Long, java.lang.Double)]] = Array.tabulate(nq) { i =>
-      for (r <- entRows; j <- qVecs(i).indices) yield {
-        val v = toD(r.get(1)).asInstanceOf[ArrayData]
-        r.getLong(0) -> (if (qVecs(i)(j) == null || v == null || r.isNullAt(2)) null
-                         else walkSim(qVecs(i)(j), qFloat, qNrms(i)(j), v, dFloat, r.getDouble(2)))
-      }
+      for (e <- entEdges; j <- 0 until qs.width(i)) yield e.dst -> qs.sim(i, j, e)
     }
     val row = new SpecificInternalRow(ScoreSchema.map(_.dataType))
     // query i's frontier rows, filtered like every candidate (round-0
@@ -664,117 +803,120 @@ object GraphAnnIndex {
               pred: Option[BasePredicate]): ArrayBuffer[(Double, Long)] = {
       val buf = ArrayBuffer.empty[(Double, Long)]
       frontier(i).foreach { case (n, s) =>
-        if (s != null && !(dropSelf && n == qIds(i)) && passes(pred, row, qIds(i), n, s))
+        if (s != null && !(dropSelf && n == qs.ids(i)) && passes(pred, row, qs.ids(i), n, s))
           buf += ((s.doubleValue, n))
       }
       lists.foreach(buf ++= _)
       TopKAgg.cut(buf, cut, dedupIds = true)
     }
-    val ranked =
-      // with no step, the candidates are round 0's rows, unfiltered
-      if (steps < 1) Array.tabulate(nq)(merge(_, Nil, k, dropSelf = true, None))
-      else {
-        val filter = candidateFilter.map(boundFilter(spark, _))
-        val pred = predicate(filter)
-        val cached = maskDeleted(edges.select(col("src"), col("dst"), col("dv"), col("dnrm")),
-            "dst", delMask)
-          .queryExecution.toRdd.mapPartitions { rows =>
-            val bySrc = LongMap.empty[ArrayBuffer[Edge]]
-            rows.foreach { r =>
-              // a NULL vector or norm scores NULL, which every cut drops
-              if (!r.isNullAt(2) && !r.isNullAt(3))
-                bySrc.getOrElseUpdate(r.getLong(0), ArrayBuffer.empty) +=
-                  Edge(r.getLong(1), r.getArray(2).copy(), r.getDouble(3))
-            }
-            Iterator.single(bySrc.mapValuesNow(_.toArray))
+    // with no step, the candidates are round 0's rows, unfiltered
+    if (steps < 1) Array.tabulate(nq)(merge(_, Nil, last, dropSelf = true, None))
+    else {
+      val filter = candidateFilter.map(boundFilter(spark, _))
+      val pred = predicate(filter)
+      val cached = payload.queryExecution.toRdd.mapPartitions { rows =>
+          val bySrc = LongMap.empty[ArrayBuffer[Edge]]
+          rows.foreach { r =>
+            // a NULL payload or norm scores NULL, which every cut drops
+            if (!r.isNullAt(2) && !r.isNullAt(3))
+              bySrc.getOrElseUpdate(r.getLong(0), ArrayBuffer.empty) +=
+                Edge(r.getLong(1), r.getArray(2).copy(), r.getDouble(3))
           }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val qB = sc.broadcast(QueryBatch(qIds, qVecs, qFloat, qNrms))
-        def step(cut: Int, last: Boolean): Array[ArrayBuffer[(Double, Long)]] = {
-          val fB = sc.broadcast(frontier.map(_.map(_._1).distinct))
-          val parts = try sc.runJob(cached, (it: Iterator[LongMap[Array[Edge]]]) =>
-            stepTask(it, qB.value, fB.value, dFloat, cut, last, filter))
-          finally fB.destroy()
-          Array.tabulate(nq)(i => merge(i, parts.map(_(i)), cut, last, pred))
+          Iterator.single(bySrc.mapValuesNow(_.toArray))
         }
-        try {
-          (1 until steps).foreach { _ =>
-            frontier = step(beam, last = false)
-              .map(_.map { case (s, n) => n -> Double.box(s) }.toArray)
-          }
-          step(k, last = true)
-        } finally {
-          cached.unpersist(blocking = false)
-          qB.destroy()
-        }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val qB = sc.broadcast(qs)
+      def step(cut: Int, isLast: Boolean): Array[ArrayBuffer[(Double, Long)]] = {
+        val fB = sc.broadcast(frontier.map(_.map(_._1).distinct))
+        val parts = try sc.runJob(cached, (it: Iterator[LongMap[Array[Edge]]]) =>
+          stepTask(it, qB.value, fB.value, cut, isLast, filter))
+        finally fB.destroy()
+        Array.tabulate(nq)(i => merge(i, parts.map(_(i)), cut, isLast, pred))
       }
-    spark.createDataFrame(java.util.Arrays.asList(
-      (for (i <- 0 until nq; ((s, n), r) <- ranked(i).zipWithIndex)
-        yield Row(qIds(i), n, r + 1L, s)): _*), RankedSchema)
+      try {
+        (1 until steps).foreach { _ =>
+          frontier = step(beam, isLast = false)
+            .map(_.map { case (s, n) => n -> Double.box(s) }.toArray)
+        }
+        step(last, isLast = true)
+      } finally {
+        cached.unpersist(blocking = false)
+        qB.destroy()
+      }
+    }
   }
 
-  /** The distributed regime: the frontier stays a localCheckpointed
-    * DataFrame and the query table is never collected. Returns the
-    * last step's (query_id, node, sim) candidate union. */
-  private def walkDistributed(meta: Meta, liveEdgeDf: DataFrame, ent: DataFrame,
-                              queries: DataFrame, beam: Int, steps: Int, entries: Int,
+  /** (id, payload, norm) rows collected as [[Edge]]s; a NULL norm
+    * nulls the payload. */
+  private def collectEdges(df: DataFrame): Array[Edge] = {
+    val toC = CatalystTypeConverters.createToCatalystConverter(df.schema(1).dataType)
+    df.collect().map(r => Edge(r.getLong(0),
+      if (r.isNullAt(1) || r.isNullAt(2)) null else toC(r.get(1)).asInstanceOf[ArrayData],
+      if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
+  }
+
+  /** Every nq-proportional side is SIZE-ROUTED: broadcast below
+    * `maxBroadcastFrontier` rows, sort-merge shuffle above — a
+    * broadcast() collects to the driver and ships whole to every
+    * executor, the exact materialization the distributed regime exists
+    * to avoid (the Scraper.crawlFrontier dual). */
+  private def sized(df: DataFrame, rows: Long, maxBroadcastFrontier: Long): DataFrame =
+    if (rows <= maxBroadcastFrontier) broadcast(df) else df.hint("merge")
+
+  /** `df` cut from its plan WITHOUT a persisted copy: the rows come
+    * from `df`'s executed RDD, so a later plan reads its shuffle
+    * outputs (Spark skips a shuffle stage whose outputs exist) rather
+    * than re-planning `df`, and nothing lands in the block store. */
+  private def pinned(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd, df.schema)
+
+  /** The distributed regime, shared by the raw and the PQ walks: the
+    * frontier stays a distributed DataFrame and the query table is
+    * never collected. `scored0` is round 0's (query_id, node, sim)
+    * rows; each step expands the frontier over the live edges with the
+    * `payload` columns, and `score` turns (query_id, node, payload)
+    * rows into (query_id, node, sim). Returns the last step's (query_id,
+    * node, sim) candidate union. */
+  private def walkDistributed(meta: Meta, liveEdgeDf: DataFrame, payload: Seq[Column],
+                              scored0: DataFrame, score: DataFrame => DataFrame,
+                              frontierBound: Long, beam: Int, steps: Int,
                               maxBroadcastFrontier: Long, candidateFilter: Option[Column],
                               delMask: Option[Either[Array[Long], DataFrame]]): DataFrame = {
-    // pin the live edge table for the walk: the pb filters sit ABOVE
-    // the cached relation, so the first probe reads the whole live
-    // edge table into the cache and the later probes hit memory, not
-    // parquet. persist() keeps the LOGICAL plan (lineage still reads
-    // only index bytes); unpersist below is non-blocking, and any
-    // post-return consumer of the lazy result re-reads from disk.
-    val edges = liveEdgeDf.persist(StorageLevel.MEMORY_AND_DISK)
-    val q = queries.select(col("query_id"), col("qv"), norm(col("qv")).as("qnrm"))
-      .localCheckpoint(true)
-    val nq = q.count()
-    // every nq-proportional side is SIZE-ROUTED: broadcast below
-    // `maxBroadcastFrontier` rows, sort-merge shuffle above — a
-    // broadcast() collects to the driver and ships whole to every
-    // executor, the exact materialization the distributed regime
-    // exists to avoid (the Scraper.crawlFrontier dual)
-    def sized(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= maxBroadcastFrontier) broadcast(df) else df.hint("merge")
-    def score(cand: DataFrame): DataFrame =
-      cand.join(sized(q, nq), Seq("query_id")).select(col("query_id"), col("node"), SimCol)
-    var beamScored: DataFrame = score(
-      q.select(col("query_id")).crossJoin(
-        ent.select(col("id").as("node"), col("v").as("dv"), col("nrm").as("dnrm"))))
-      .localCheckpoint(true)
-    // the frontier can never exceed nq·max(beam, entries) rows — an
-    // ANALYTIC bound, so size-routing costs zero extra jobs (routing
-    // on it errs only toward the shuffle branch this regime prefers)
-    val frontierBound = nq * math.max(beam, entries)
+    // pin the walk's edge columns: the pb filters sit ABOVE the cached
+    // relation, so the first probe caches the whole live edge table and
+    // later probes hit memory. persist() keeps the LOGICAL plan, so the
+    // lazy result re-reads index bytes once unpersist below has run.
+    val edges = liveEdgeDf.select(Seq(col("src"), col("dst"), col("pb")) ++ payload: _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var beamScored = pinned(scored0)
     var lastScored: DataFrame = beamScored
     (1 to steps).foreach { step =>
       // the pb prune still applies — the frontier's distinct pb set is
-      // ≤ pBuckets rows, one cheap per-round aggregate — and the
-      // size-routed probe keeps the frontier off the driver when it
-      // outgrows the broadcast budget. One pruned edge scan per step,
-      // never the corpus.
+      // ≤ pBuckets rows, one cheap per-round aggregate — and the probe
+      // is size-routed on `frontierBound`, the ANALYTIC frontier bound
+      // nq·max(beam, entries), so routing costs no job. One pruned edge
+      // scan per step, never the corpus.
       val pbs = beamScored
         .select(pmod(col("node"), lit(meta.pBuckets.toLong)).as("fpb"))
         .distinct().collect().map(_.getLong(0))
-      val expanded = sized(beamScored.select(col("query_id"), col("node")), frontierBound)
+      val expanded = sized(beamScored.select(col("query_id"), col("node")), frontierBound,
+          maxBroadcastFrontier)
         .join(edges.where(col("pb").isin(pbs: _*)), col("node") === col("src"))
-        .select(col("query_id"), col("dst").as("node"), col("dv"), col("dnrm"))
-      // duplicates of a (query, node) pair score IDENTICALLY (the
-      // scorer is deterministic), so the per-round dedup exchanges
-      // are fused into the beam cut: score everything, let the
-      // DISTINCT-id top-k aggregate dedup inside its one exchange
+        .select(Seq(col("query_id"), col("dst").as("node")) ++ payload: _*)
+      // the per-round dedup is fused into the beam cut: score
+      // everything, and the DISTINCT-id top-k aggregate keeps each
+      // node's best sim (a repeated query_id scores a node once per
+      // vector) inside its one exchange
       val unioned = beamScored.select(col("query_id"), col("node"), col("sim"))
         .unionByName(score(expanded))
       val scoredRound = maskDeleted(
           candidateFilter.fold(unioned)(unioned.where), "node", delMask)
       lastScored = scoredRound
       if (step < steps)
-        beamScored = scoredRound.groupBy(col("query_id"))
+        beamScored = pinned(scoredRound.groupBy(col("query_id"))
           .agg(TopKAgg.topKDistinct(col("sim"), col("node"), beam).as("top"))
           .select(col("query_id"), explode(col("top")).as("t"))
-          .select(col("query_id"), col("t.id").as("node"), col("t.score").as("sim"))
-          .localCheckpoint(true)
+          .select(col("query_id"), col("t.id").as("node"), col("t.score").as("sim")))
     }
     edges.unpersist(false)
     lastScored
@@ -786,202 +928,59 @@ object GraphAnnIndex {
   def searchSelf(spark: SparkSession, dir: String, nQueries: Int = 5,
                  k: Int = 10, beam: Int = 32, steps: Int = 8,
                  entries: Int = 16, maxDriverFrontier: Int = 100000,
-                 maxBroadcastFrontier: Long = 1000000L): DataFrame = {
-    // the query frame below reads entries/ BEFORE search() runs its
+                 maxBroadcastFrontier: Long = 1000000L): DataFrame =
+    serveSelf(spark, dir, pq = false, nQueries, k, beam, steps, entries, maxDriverFrontier,
+      maxBroadcastFrontier)
+
+  private def serveSelf(spark: SparkSession, dir: String, pq: Boolean, nQueries: Int,
+                        k: Int, beam: Int, steps: Int, entries: Int,
+                        maxDriverFrontier: Int, maxBroadcastFrontier: Long): DataFrame = {
+    // the query frame below reads entries/ BEFORE serve() runs its
     // own recovery — heal a torn reclaim swap first
     recoverCompaction(spark, dir)
     val meta = readMeta(spark, dir)
-    searchWith(spark, dir, meta,
+    serve(spark, dir, meta,
       readEntries(spark, dir, meta.vecType)
         .select(col("id").as("query_id"), col("v").as("qv"))
         .where(col("query_id") < nQueries),
-      k, beam, steps, entries, maxDriverFrontier, maxBroadcastFrontier, None)
+      pq, k, beam, steps, entries, maxDriverFrontier, maxBroadcastFrontier, None)
   }
 
   /** PQ-compressed serving over the SAME persisted layout (the
     * DiskANN memory model — the SQL reference PQ walk,
     * `GraphWalkReference.graphPqTopK` in the test sources, spells out
-    * the algorithm): the beam walk reads ONLY (src, dst, dcodes, pb)
-    * from the edge table — COLUMN PRUNING is the footprint win, the
+    * the algorithm): the beam walk reads ONLY (src, dst, dcodes) from
+    * the edge table — COLUMN PRUNING is the footprint win, the
     * pqM-codes payload instead of `dim` doubles both on disk and in
-    * the pinned working set — scores by asymmetric distance against
-    * the broadcast per-query LUT, and reranks the final candidate
-    * set at full precision from the id-bucketed `nodes/` table (one
-    * partition-pruned fetch). Bit-identical to that reference walk on
+    * the walk's working set — scores by asymmetric distance (ADC:
+    * each query vector's LUT of 6-dp sub-vector · codeword terms,
+    * summed as exact decimals), and reranks the final candidate set at
+    * full precision from the id-bucketed `nodes/` table. It runs on
+    * [[search]]'s two walks with the ADC scorer and the codes as the
+    * edge payload. In the driver regime the last step keeps every
+    * distinct candidate, one partition-pruned `nodes/` fetch brings
+    * their vectors, and the rerank and the top-k cut run on the
+    * driver: the result is a local relation. In the distributed regime
+    * the rerank is a lazy join against `nodes/`, ranked by
+    * [[Similarity.rankTopK]]. Rows that share a query_id rank as one
+    * query, as in [[search]]. Bit-identical to the reference walk on
     * the same corpus and parameters. */
   def searchPq(spark: SparkSession, dir: String, queries: DataFrame,
                k: Int = 10, beam: Int = 32, steps: Int = 8, entries: Int = 16,
                maxDriverFrontier: Int = 100000,
                maxBroadcastFrontier: Long = 1000000L,
-               candidateFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val meta = readMeta(spark, dir)
-    val delMask = deleteMask(spark, dir) // the raw walk's delete contract, verbatim
-    val subDim = meta.dim / meta.pqM
-    val cb = spark.read.parquet(s"$dir/codebook")
-      .select(col("code").cast("long"), col("sub").cast("int"), col("cv"))
-    val edges = liveEdges(spark, dir, Some(meta))
-      .select(col("src"), col("dst"), col("dcodes"), col("pb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val q = queries
-      .select(col("query_id").cast("long"), col("qv"), norm(col("qv")).as("qnrm"))
-      .localCheckpoint(true)
-    val nq = q.count()
-    // per-query LUT FLATTENED to one array row per query (sub-major,
-    // code-minor: index = sub·nCodes + code): ADC then scores as a
-    // broadcast join + one codegen array fold instead of a
-    // posexplode → LUT join → groupBy-sum re-shuffle of every
-    // candidate each round (guide §2.3/§2.4 — the shuffle per round
-    // carried candidates·pqM rows; now the only per-round exchange
-    // is the beam cut). The decimal fold order is sub 0..pqM-1 —
-    // decimal addition is exact, so the sum equals the groupBy form.
-    val lut = Similarity
-      .subVectors(q.select(col("query_id").as("id"), col("qv").as("v")),
-        meta.pqM, subDim, "sv")
-      .join(broadcast(cb), "sub")
-      .select(col("id").as("query_id"), col("sub"), col("code"),
-        round(dot(col("sv"), col("cv")), 6).as("lv"))
-      .groupBy(col("query_id"))
-      .agg(sort_array(collect_list(struct(col("sub"), col("code"), col("lv"))))
-        .as("scl"))
-      .select(col("query_id"), expr("transform(scl, x -> x.lv)").as("lutv"))
-      .localCheckpoint(true) // nq rows, pqM·nCodes doubles each
-    val scoreSchema = StructType(Seq(StructField("query_id", LongType),
-      StructField("node", LongType), StructField("sim", DoubleType)))
-    // nq-proportional sides are SIZE-ROUTED exactly as in [[search]]:
-    // broadcast below `maxBroadcastFrontier` rows, sort-merge above
-    def sized(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= maxBroadcastFrontier) broadcast(df) else df.hint("merge")
-    val nCodes = meta.nCodes
-    def adc(cand: DataFrame): DataFrame =
-      cand.join(sized(lut, nq), Seq("query_id"))
-        .select(col("query_id"), col("node"),
-          expr(s"""cast(aggregate(
-            transform(dcodes, (c, s) -> element_at(lutv,
-              cast(s * $nCodes + c + 1 as int))),
-            cast(0 as decimal(28,6)),
-            (acc, v) -> cast(acc + cast(v as decimal(18,6)) as decimal(28,6)),
-            acc -> acc) as double)""").as("sim"))
-    // entry payloads: one model-sized fetch + frozen-codebook encode
-    // (deterministic — identical to the stored codes)
-    val ent = maskDeleted(readEntries(spark, dir, meta.vecType)
-      .select(col("id"), col("v"))
-      .where(col("id") < math.min(entries, meta.entryCap)), "id", delMask)
-    val entC = ent.join(pqCodesArr(ent, cb, meta.pqM, subDim), Seq("id"))
-      .select(col("id").as("node"), col("codes").as("dcodes"))
-    var beamScored: DataFrame = adc(
-      q.select(col("query_id")).crossJoin(entC))
-    val driverSide = nq * beam <= maxDriverFrontier && nq * entries <= maxDriverFrontier
-    var frontierRows: Array[Row] = null
-    // the frontier can never exceed nq·max(beam, entries) rows — an
-    // ANALYTIC bound, so size-routing costs zero extra jobs (routing
-    // on it errs only toward the shuffle branch this regime prefers)
-    val frontierBound = nq * math.max(beam, entries)
-    if (driverSide) {
-      frontierRows = beamScored.collect()
-      beamScored = spark.createDataFrame(
-        java.util.Arrays.asList(frontierRows: _*), scoreSchema)
-    } else beamScored = beamScored.localCheckpoint(true)
-    var lastScored: DataFrame = beamScored
-    (1 to steps).foreach { step =>
-      val expanded =
-        if (driverSide) {
-          val nodes = frontierRows.map(_.getLong(1)).distinct
-          val pbs = nodes.map(n => ((n % meta.pBuckets) + meta.pBuckets) % meta.pBuckets)
-            .distinct
-          edges.where(col("pb").isin(pbs: _*) && col("src").isin(nodes: _*))
-            .join(broadcast(beamScored.select(col("query_id"), col("node"))),
-              col("src") === col("node"))
-            .select(col("query_id"), col("dst").as("node"), col("dcodes"))
-        } else {
-          // distributed frontier: pb-pruned scan (≤ pBuckets distinct
-          // values, one cheap per-round aggregate) + size-routed probe
-          // — see [[search]]
-          val pbs = beamScored
-            .select(pmod(col("node"), lit(meta.pBuckets.toLong)).as("fpb"))
-            .distinct().collect().map(_.getLong(0))
-          sized(beamScored.select(col("query_id"), col("node")), frontierBound)
-            .join(edges.where(col("pb").isin(pbs: _*)), col("node") === col("src"))
-            .select(col("query_id"), col("dst").as("node"), col("dcodes"))
-        }
-      // the metadata filter composes with the COMPRESSED walk the
-      // same way as with the raw one (filtered-DiskANN over PQ): the
-      // whole candidate union filters each round, entry points
-      // included from round 1 on, so the ADC-guided beam navigates
-      // the allowed subgraph
-      // dedup is fused into the DISTINCT-id beam cut exactly as in
-      // [[search]] — duplicates of a (query, node) pair carry the
-      // same deterministic ADC sim, so one exchange replaces the
-      // dedup→union→dedup→topK chain's three
-      val unioned = beamScored.select(col("query_id"), col("node"), col("sim"))
-        .unionByName(adc(expanded))
-      val scoredRound = maskDeleted(
-          candidateFilter.fold(unioned)(unioned.where), "node", delMask)
-      lastScored = scoredRound
-      if (step < steps) {
-        val topB = scoredRound.groupBy(col("query_id"))
-          .agg(graft.plans.TopKAgg.topKDistinct(col("sim"), col("node"), beam).as("top"))
-          .select(col("query_id"), explode(col("top")).as("t"))
-          .select(col("query_id"), col("t.id").as("node"), col("t.score").as("sim"))
-        if (driverSide) {
-          frontierRows = topB.collect()
-          beamScored = spark.createDataFrame(
-            java.util.Arrays.asList(frontierRows: _*), scoreSchema)
-        } else beamScored = topB.localCheckpoint(true)
-      }
-    }
-    edges.unpersist(false)
-    // full-precision rerank from the id-bucketed node table — the
-    // one fetch of raw vectors a compressed search pays
-    val nodesTbl = spark.read.parquet(s"$dir/nodes")
-      .select(col("id").cast("long"), col("v"), col("nrm"),
-        col("nb").cast("long"))
-    // one dedup at walk end (the per-round dedups are fused into the
-    // beam cut): the rerank join must not multiply duplicate
-    // candidate rows into the fetch
-    val candKeys = lastScored.select(col("query_id"), col("node")).distinct()
-    // the static-pruned fetch collects only the DISTINCT candidate
-    // ids (never the scored rows — the final candidate union is
-    // ~nq·beam·degree rows, NOT bounded by the frontier guard), and
-    // only up to the same maxDriverFrontier budget: one id over and
-    // the fetch degrades to the distributed scan, like the walk
-    val fetch =
-      if (driverSide) {
-        val ids = lastScored.select(col("node")).distinct()
-          .limit(maxDriverFrontier + 1).collect().map(_.getLong(0))
-        if (ids.length > maxDriverFrontier) nodesTbl
-        else {
-          val nbs = ids.map(n => ((n % meta.pBuckets) + meta.pBuckets) % meta.pBuckets)
-            .distinct
-          nodesTbl.where(col("nb").isin(nbs: _*) && col("id").isin(ids: _*))
-        }
-      } else nodesTbl
-    // candKeys is the final candidate union (~nq·beam·degree rows —
-    // NOT frontier-bounded): broadcast only on the driver branch,
-    // where nq·beam is under the guard; distributed serving shuffles
-    val rr = fetch
-      .join(if (driverSide) broadcast(candKeys) else candKeys.hint("merge"),
-        col("node") === col("id"))
-      .join(sized(q, nq), Seq("query_id"))
-      .where(col("node") =!= col("query_id"))
-      .select(col("query_id"), col("node").as("neighbor_id"),
-        round(cosinePrenormed(dot(col("qv"), col("v")), col("qnrm"), col("nrm")), 6)
-          .as("sim"))
-    Similarity.rankTopK(rr, k)
-  }
+               candidateFilter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    serve(spark, dir, readMeta(spark, dir), queries, pq = true, k, beam, steps, entries,
+      maxDriverFrontier, maxBroadcastFrontier, candidateFilter)
 
   /** Self-query PQ serving: queries from the entries table, the
     * whole search off the persisted layout. */
   def searchPqSelf(spark: SparkSession, dir: String, nQueries: Int = 5,
                    k: Int = 10, beam: Int = 32, steps: Int = 8,
                    entries: Int = 16, maxDriverFrontier: Int = 100000,
-                   maxBroadcastFrontier: Long = 1000000L): DataFrame = {
-    recoverCompaction(spark, dir) // see searchSelf: heal before the entries read
-    searchPq(spark, dir,
-      spark.read.parquet(s"$dir/entries")
-        .select(col("id").cast("long").as("query_id"), col("v").as("qv"))
-        .where(col("query_id") < nQueries),
-      k, beam, steps, entries, maxDriverFrontier, maxBroadcastFrontier)
-  }
+                   maxBroadcastFrontier: Long = 1000000L): DataFrame =
+    serveSelf(spark, dir, pq = true, nQueries, k, beam, steps, entries, maxDriverFrontier,
+      maxBroadcastFrontier)
 
   /** The DISTINCT live (src, dst) set — the spec surface for
     * rebuild-equivalence proofs. */

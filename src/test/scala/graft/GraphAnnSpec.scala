@@ -72,6 +72,26 @@ class GraphAnnSpec extends SparkSpec {
       maxDriverFrontier = 0, candidateFilter = filt)
     assert(pqDrv.collect().map(_.toString).toSeq ==
       pqDist.collect().map(_.toString).toSeq)
+    // a repeated query_id ranks as ONE query in both PQ regimes: each
+    // candidate scores against each of the id's vectors, and the cut
+    // keeps distinct neighbors. Query 1 with a second, different vector
+    // (entry 7's); query 2 with its own vector twice
+    def pq(qs: org.apache.spark.sql.DataFrame, mdf: Int) = graft.sources.GraphAnnIndex
+      .searchPq(spark, dir, qs, maxDriverFrontier = mdf).collect().map(_.toString).toSeq
+    val twoVecs = q.unionByName(spark.read.parquet(s"$dir/entries")
+      .where(col("id") === 7).select(lit(1L).as("query_id"), col("v").as("qv")))
+    val sameTwice = q.unionByName(q.where(col("query_id") === 2))
+    for ((name, qs) <- Seq("two vectors" -> twoVecs, "same vector twice" -> sameTwice)) {
+      val drvRows = pq(qs, 100000)
+      assert(drvRows == pq(qs, 0), s"$name: regimes disagree")
+      val rows = graft.sources.GraphAnnIndex.searchPq(spark, dir, qs).collect()
+      assert(rows.map(r => (r.getLong(0), r.getLong(1))).distinct.length == rows.length,
+        s"$name: a neighbor listed twice")
+      assert(rows.groupBy(_.getLong(0)).forall(_._2.map(_.getLong(2)).toSeq == (1L to 10L)),
+        s"$name: ranks are not 1..k")
+    }
+    // the same vector twice is the same query as once
+    assert(pq(sameTwice, 100000) == pq(q, 100000))
   }
 
   test("an OVERSIZED distributed frontier never broadcasts — size-routed shuffle probes") {
@@ -263,10 +283,16 @@ class GraphAnnSpec extends SparkSpec {
     val fused = GraphWalkReference.graphPqTopK(emb, nQueries = 5, k = 10)
     assert(served.collect().map(_.toString).toSeq ==
       fused.collect().map(_.toString).toSeq)
-    // lineage: index bytes only, never the corpus
-    val inputs = served.inputFiles
-    assert(inputs.nonEmpty && inputs.forall(_.contains(new java.io.File(dir).getName)),
-      s"expected only index inputs, got ${inputs.mkString(", ")}")
+    // lineage: index bytes only, never the corpus. The driver regime's
+    // result is a local relation (no scans at all); the distributed
+    // regime's lazy plan scans index files only
+    for (mdf <- Seq(100000, 0)) {
+      val inputs = graft.sources.GraphAnnIndex.searchPqSelf(spark, dir, nQueries = 5, k = 10,
+        maxDriverFrontier = mdf).inputFiles
+      assert((mdf == 0) == inputs.nonEmpty &&
+        inputs.forall(_.contains(new java.io.File(dir).getName)),
+        s"maxDriverFrontier=$mdf: expected only index inputs, got ${inputs.mkString(", ")}")
+    }
   }
 
   test("incremental append serves PQ-identically to the fused walk on the grown corpus") {

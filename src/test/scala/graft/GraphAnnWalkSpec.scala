@@ -6,16 +6,16 @@ import graft.sources.GraphAnnIndex
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
 
-/** The driver-regime beam walk of [[GraphAnnIndex.search]]: its
-  * out-of-SQL scorer and cut agree bit for bit with the SQL forms, a
-  * search runs a bounded number of Spark jobs, and it leaves no cached
-  * RDD behind. */
+/** The driver-regime beam walk of [[GraphAnnIndex.search]] and
+  * [[GraphAnnIndex.searchPq]]: its out-of-SQL scorers (cosine and ADC)
+  * and cut agree bit for bit with the SQL forms, a search runs a
+  * bounded number of Spark jobs, and it leaves no cached RDD behind. */
 class GraphAnnWalkSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf)
@@ -97,6 +97,67 @@ class GraphAnnWalkSpec extends SparkSpec {
     assert(viaCut == viaSql)
   }
 
+  test("the ADC scorer is bit-equal to the SQL aggregate over cast(lutv term as decimal(18,6))") {
+    val rnd = new java.util.Random(20261019L)
+    def box(xs: Seq[Double]): Seq[java.lang.Double] = xs.map(Double.box)
+    for (nCodes <- Seq(16, 5)) {
+      // seeded LUTs and codes; the 1e10 scale puts the terms and sums past
+      // 2^52 unscaled, where BigDecimal.doubleValue leaves its fast path
+      val seeded = (0 until 300).map { i =>
+        val pqM = 1 + rnd.nextInt(8)
+        val scale = Seq(1e-3, 1.0, 1e3, 1e10)(rnd.nextInt(4))
+        (i.toLong, box(Seq.fill(pqM * nCodes)(rnd.nextGaussian() * scale)),
+          Seq.fill(pqM)(Long.box(rnd.nextInt(nCodes).toLong)))
+      }
+      def one(id: Long, terms: (Int, Int, Double)*) = {
+        val pqM = terms.map(_._1).max + 1
+        val lut = Array.fill(pqM * nCodes)(0.0)
+        terms.foreach { case (sub, code, v) => lut(sub * nCodes + code) = v }
+        val codes = (0 until pqM).map(s => terms.find(_._1 == s).fold(0)(_._2).toLong)
+        (id, box(lut.toSeq), codes.map(Long.box))
+      }
+      // 6-dp halves: HALF_UP over the shortest decimal repr rounds these
+      // away from zero (a binary expansion would round 5.0E-7 down to 0)
+      val boundary = Seq(
+        one(1000L, (0, 3, 5.0e-7)),
+        one(1001L, (0, 1, -5.0e-7)),
+        one(1002L, (0, 2, 0.1234565), (1, 4, 5.0e-7)),
+        one(1003L, (0, 0, 2.5e-6), (1, 1, -3.5e-6), (2, 2, 1.0000015)),
+        one(1004L, (0, 1, 123456789012.34567), (1, 2, 98765432109.87654)))
+      // NULLs: a NULL term picked, a NULL code, NULL codes
+      val nulls = Seq(
+        (2000L, Seq[java.lang.Double](null) ++ box(Seq.fill(2 * nCodes - 1)(0.25)),
+          Seq(Long.box(0L), Long.box(1L))),
+        (2001L, box(Seq.fill(2 * nCodes)(0.25)), Seq(Long.box(1L), null)),
+        (2002L, box(Seq.fill(nCodes)(0.25)), null))
+      val rows = (seeded ++ boundary ++ nulls).map { case (id, l, c) => Row(id, l, c) }
+      val schema = StructType(Seq(StructField("id", LongType),
+        StructField("lutv", ArrayType(DoubleType)), StructField("dcodes", ArrayType(LongType))))
+      val sql = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .select(col("id"), col("lutv"), col("dcodes"), GraphAnnIndex.adcCol(nCodes))
+        .collect()
+      assert(sql.length == rows.length)
+      val walked = sql.map { r =>
+        val codes = if (r.isNullAt(2)) null
+          else new GenericArrayData(r.getSeq[java.lang.Long](2).toArray[Any])
+        val s = GraphAnnIndex.adcSim(
+          GraphAnnIndex.adcTerms(r.getSeq[java.lang.Double](1)), nCodes, codes)
+        val expected = if (r.isNullAt(3)) null else Double.box(r.getDouble(3))
+        assert((s == null) == (expected == null), s"NULL mismatch at id ${r.getLong(0)}")
+        if (s != null)
+          assert(java.lang.Double.doubleToRawLongBits(s) ==
+            java.lang.Double.doubleToRawLongBits(expected),
+            s"nCodes $nCodes, id ${r.getLong(0)}: kernel $s vs SQL $expected")
+        r.getLong(0) -> s
+      }.toMap
+      assert(walked(1000L) == 1.0e-6 && walked(1001L) == -1.0e-6 &&
+        walked(1002L) == 0.123458 && walked(1003L) == 1.000001,
+        "the 6-dp half boundaries must round HALF_UP")
+      assert(walked(1004L) == 222222221122.222210, "large terms sum exactly")
+      assert(Seq(2000L, 2001L, 2002L).forall(walked(_) == null), "NULLs score NULL")
+    }
+  }
+
   test("the driver walk matches the distributed walk at every step count and under a sim filter") {
     def entryQ(d: String) = spark.read.parquet(s"$d/entries")
       .select(col("id").cast("long").as("query_id"), col("v").as("qv"))
@@ -121,17 +182,21 @@ class GraphAnnWalkSpec extends SparkSpec {
         (s"repeated query_id, steps=$steps", dir, repeated, 7, 32, steps, None),
         (s"deleted vectors, steps=$steps", deleted, q, 7, 32, steps, None))) :+
       (("deleted vectors under a sim filter", deleted, q, 7, 32, 8, filt))
-    for ((name, d, qs, k, beam, steps, f) <- cases) {
+    for ((name, d, qs, k, beam, steps, f) <- cases; pq <- Seq(false, true)) {
       def run(mdf: Int) = {
-        val res = GraphAnnIndex.search(spark, d, qs, k = k, beam = beam, steps = steps,
-          maxDriverFrontier = mdf, candidateFilter = f)
+        val res =
+          if (pq) GraphAnnIndex.searchPq(spark, d, qs, k = k, beam = beam, steps = steps,
+            maxDriverFrontier = mdf, candidateFilter = f)
+          else GraphAnnIndex.search(spark, d, qs, k = k, beam = beam, steps = steps,
+            maxDriverFrontier = mdf, candidateFilter = f)
         (res.schema, res.collect().map(_.toString).toSeq)
       }
       val (drvSchema, drv) = run(100000)
       val (distSchema, dist) = run(0)
-      assert(drv.nonEmpty, s"$name: empty result")
-      assert(drvSchema == distSchema, s"$name: schemas disagree: $drvSchema vs $distSchema")
-      assert(drv == dist, s"$name: regimes disagree")
+      val tag = s"$name${if (pq) " (PQ)" else ""}"
+      assert(drv.nonEmpty, s"$tag: empty result")
+      assert(drvSchema == distSchema, s"$tag: schemas disagree: $drvSchema vs $distSchema")
+      assert(drv == dist, s"$tag: regimes disagree")
     }
   }
 
@@ -162,6 +227,36 @@ class GraphAnnWalkSpec extends SparkSpec {
     val plan = res.queryExecution.optimizedPlan
     assert(plan.isInstanceOf[LocalRelation], s"not a local relation:\n$plan")
     assert(res.inputFiles.isEmpty, s"the result reads ${res.inputFiles.mkString(", ")}")
+  }
+
+  test("a driver-regime searchPqSelf, collected, runs at most steps + 8 Spark jobs") {
+    val steps = 8
+    val d = dir // built outside the count
+    var res: DataFrame = null
+    val jobs = SparkJobs.countIn(spark) {
+      res = GraphAnnIndex.searchPqSelf(spark, d, steps = steps)
+      res.collect()
+    }
+    info(s"$jobs jobs")
+    assert(jobs > 0 && jobs <= steps + 8, s"$jobs jobs for a $steps-step PQ search")
+    // reranked and cut on the driver: a local relation, nothing left to read
+    val plan = res.queryExecution.optimizedPlan
+    assert(plan.isInstanceOf[LocalRelation], s"not a local relation:\n$plan")
+    assert(res.inputFiles.isEmpty, s"the result reads ${res.inputFiles.mkString(", ")}")
+  }
+
+  test("a collected searchPq leaves no RDD it cached behind, in either regime") {
+    val sc = spark.sparkContext
+    val q = spark.read.parquet(s"$dir/entries")
+      .select(col("id").cast("long").as("query_id"), col("v").as("qv"))
+      .where(col("query_id") < 4)
+    for (mdf <- Seq(100000, 0)) {
+      val before = sc.getPersistentRDDs.keySet
+      val got = GraphAnnIndex.searchPq(spark, dir, q, maxDriverFrontier = mdf).collect()
+      assert(got.nonEmpty)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"maxDriverFrontier=$mdf: cached RDDs left ${left.mkString(", ")}")
+    }
   }
 
   test("a collected search leaves no RDD it cached behind") {
